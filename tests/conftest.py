@@ -95,7 +95,10 @@ def pytest_collection_modifyitems(config, items):
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark(app_name="tests", master="local[8]", shuffle_partitions=8)
+    # the host's cores, as the benchmark and the Tier-1 command run them:
+    # the pipeline's per-table pool is bounded by defaultParallelism
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count()
+    s = get_spark(app_name="tests", master=f"local[{cpus}]", shuffle_partitions=8)
     yield s
     s.stop()
 

@@ -85,6 +85,22 @@ def test_classifier_gate_drops_spam(spark, model):
     assert kept == list(range(len(GOOD)))  # all good kept, all spam gone
 
 
+def test_gate_runs_in_a_session_that_used_an_observation(spark, model):
+    """Once a session has used an Observation, a SparkSession no longer
+    serializes (Spark 4.1); the fitted model must not carry one (its
+    training summary did) into the scoring tasks."""
+    from pyspark.sql import Observation
+
+    obs = Observation()
+    spark.range(3).observe(obs, F.count(F.lit(1)).alias("n")).collect()
+    assert obs.get["n"] == 3
+    mixed = spark.createDataFrame(
+        [(i, t) for i, t in enumerate(GOOD + SPAM)], "doc_id long, text string"
+    )
+    kept = sorted(r["doc_id"] for r in classifier_gate(mixed, "doc_id", "text", model).collect())
+    assert kept == list(range(len(GOOD)))
+
+
 def test_scoring_is_total_on_null_and_empty(spark, model):
     df = spark.createDataFrame(
         [(1, None), (2, ""), (3, GOOD[0])], "doc_id long, text string"

@@ -1178,3 +1178,283 @@ def test_entry_session_key_and_memo_eviction():
     v2 = entrymod._memo(cache, s2, ("t",), lambda: "two")
     assert v2 == "two"
     assert len(cache) == 1 and list(cache)[0][0] == entrymod._session_key(s2)
+
+
+# ------------------------------------------------- per-table concurrency
+IV_SCHEMA = (
+    "id long, date_time string, open_value double, low_value double, "
+    "high_value double, close_value double, close_value_change double, "
+    "`index.id` string, `meta.version` long"
+)
+NEWS_SCHEMA = "id long, date_time string, title string, text string, `meta.version` long"
+
+
+def _three_tables(spark, fixtures, wh, **kw):
+    """A refreshed warehouse of three fact tables (trades_share,
+    indexvalues, news), its pipeline and the dims a tick joins; ``tick(v)``
+    builds extractors delivering one new row per table at version ``v``."""
+    trades, instruments, assets, categories, exchanges = fixtures
+    indexes = spark.createDataFrame([("x1", "Index One")], "id string, name string")
+    dims = {
+        "instruments": instruments, "assets": assets, "categories": categories,
+        "exchanges": exchanges, "indexes": indexes,
+    }
+    iv = spark.createDataFrame(
+        [(1, "14010101093000", 10.0, 9.0, 11.0, 10.5, 0.5, "x1", 1)], IV_SCHEMA
+    )
+    news = spark.createDataFrame(
+        [(1, "14010101093000", "Budget passes", "v1 body", 1)], NEWS_SCHEMA
+    )
+    pipe = MedallionPipeline(
+        spark, wh, range_start="1400/01/01", range_end="1402/12/29", **kw
+    )
+    results = pipe.run_full_refresh({
+        "trades_share": lambda: trades, "indexvalues": lambda: iv,
+        "news": lambda: news, **{k: (lambda v=v: v) for k, v in dims.items()},
+    })
+    assert not [r for r in results if r.error], results
+
+    def tick(v: int):
+        day = f"140102{v % 28 + 1:02d}093000"
+        rows = {
+            "trades_share": spark.createDataFrame(
+                [(v, day, 10.0, 12.0, 9.0, 11.0, 1.0, 5, 100, 1100.0, "i1", v)],
+                TRADES_SCHEMA),
+            "indexvalues": spark.createDataFrame(
+                [(v, day, 10.0, 9.0, 11.0, 10.5, 0.5, "x1", v)], IV_SCHEMA),
+            "news": spark.createDataFrame(
+                [(v, day, f"story {v}", "body", v)], NEWS_SCHEMA),
+        }
+        return {k: (lambda wm, df=df: df) for k, df in rows.items()}
+
+    return pipe, dims, tick
+
+
+def test_concurrent_tick_isolates_a_failing_table(spark, fixtures, tmp_path):
+    """One extractor of three raises: the other two tables land, the
+    failing one is reported with its error, results keep table order and
+    the alert hook fires exactly once, from the calling thread."""
+    import threading
+
+    alerts: list = []
+    pipe, dims, tick = _three_tables(
+        spark, fixtures, str(tmp_path / "wh"), retries=0,
+        on_failure=lambda r: alerts.append((r.table, threading.current_thread())),
+    )
+    extractors = tick(10)
+
+    def broken(_wm):
+        raise RuntimeError("indexvalues feed down")
+
+    extractors["indexvalues"] = broken
+    results = pipe.run_incremental(extractors, dims)
+    assert [r.table for r in results] == [
+        "prd_trades_share", "prd_indexvalues", "prd_news"
+    ]
+    by_table = {r.table: r for r in results}
+    assert "indexvalues feed down" in by_table["prd_indexvalues"].error
+    assert by_table["prd_trades_share"].error is None
+    assert by_table["prd_news"].error is None
+    assert alerts == [("prd_indexvalues", threading.current_thread())]
+    wh = str(tmp_path / "wh")
+    for table in ("trades_share", "news"):
+        got = spark.read.parquet(table_path(wh, "prd", table))
+        assert got.filter(F.col("`meta.version`") == 10).count() == 1, table
+    iv = spark.read.parquet(table_path(wh, "prd", "indexvalues"))
+    assert iv.agg(F.max("`meta.version`")).first()[0] == 1
+
+
+def _last_job_id(sc, group: str) -> int:
+    """Run one marker job in its own group; its id is the newest."""
+    sc.setJobGroup(group, group)
+    try:
+        sc.parallelize([1], 1).count()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return max(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_caller_job_group_covers_every_tick_job(spark, fixtures, tmp_path):
+    """Each table's chain runs on a pool thread that inherits the
+    caller's local properties: every job the tick submits (including
+    broadcast and listing jobs) lands in the caller's job group."""
+    sc = spark.sparkContext
+    pipe, dims, tick = _three_tables(spark, fixtures, str(tmp_path / "wh"))
+    first = _last_job_id(sc, "tick-before")
+    sc.setJobGroup("tick-under-test", "one incremental tick")
+    try:
+        results = pipe.run_incremental(tick(10), dims)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    last = _last_job_id(sc, "tick-after")
+    assert not [r for r in results if r.error], results
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    grouped = set(sc.statusTracker().getJobIdsForGroup("tick-under-test"))
+    assert grouped and grouped == set(range(first + 1, last))
+
+
+def test_single_table_runs_in_the_calling_thread(spark, fixtures, tmp_path, monkeypatch):
+    """A run with one table starts no pool: its jobs are submitted from
+    the caller's own thread."""
+    from web_api_postgres_etl_spark.plans import pipeline as pipeline_mod
+
+    pipe, dims, tick = _three_tables(spark, fixtures, str(tmp_path / "wh"))
+
+    def no_pool(*_a, **_k):
+        raise AssertionError("a one-table run must not start a thread pool")
+
+    monkeypatch.setattr(pipeline_mod, "ThreadPoolExecutor", no_pool)
+    results = pipe.run_incremental({"news": tick(10)["news"]}, dims)
+    assert [(r.table, r.error) for r in results] == [("prd_news", None)]
+
+
+def _tree_digest(root: str) -> dict[str, str]:
+    import hashlib
+    import os
+
+    out = {}
+    for d, _dirs, files in os.walk(root):
+        for f in files:
+            p = os.path.join(d, f)
+            with open(p, "rb") as fh:
+                out[os.path.relpath(p, root)] = hashlib.sha256(fh.read()).hexdigest()
+    return out
+
+
+def test_corrupt_sink_stops_the_tick_before_any_write(spark, fixtures, tmp_path):
+    """The watermark probes run at once, but one corrupt prd sink still
+    raises out of run_incremental before any chain starts: the healthy
+    sinks stay byte-identical."""
+    import os
+    import shutil
+
+    wh = str(tmp_path / "wh")
+    pipe, dims, tick = _three_tables(spark, fixtures, wh)
+    news = table_path(wh, "prd", "news")
+    shutil.rmtree(news)
+    os.makedirs(news)
+    with open(os.path.join(news, "part-00000.parquet"), "w") as fh:
+        fh.write("not parquet at all")
+    healthy = {t: _tree_digest(table_path(wh, "prd", t))
+               for t in ("trades_share", "indexvalues")}
+    with pytest.raises(Exception):
+        pipe.run_incremental(tick(10), dims)
+    for t, digest in healthy.items():
+        assert _tree_digest(table_path(wh, "prd", t)) == digest, t
+
+
+def _py4j_threads(spark) -> int:
+    """Live JVM threads serving a Py4J connection (ThreadMXBean): the
+    connection's run loop sits at the bottom of such a thread's stack."""
+    mx = spark._jvm.java.lang.management.ManagementFactory.getThreadMXBean()
+    n = 0
+    for t in mx.dumpAllThreads(False, False):
+        stack = t.getStackTrace()
+        bottom = range(max(len(stack) - 3, 0), len(stack))
+        n += any(stack[i].getClassName() == "py4j.ClientServerConnection" for i in bottom)
+    return n
+
+
+def test_concurrent_ticks_leak_no_jvm_threads(spark, fixtures, tmp_path):
+    """Each pool thread talks to the JVM over its own pinned Py4J
+    connection, served by one JVM thread; the connections must close
+    when the pool ends, so those threads do not pile up over ticks.
+    (The JVM's total thread count is no measure: Spark's own exchange
+    pools add threads up to their caps whatever runs the queries.)"""
+    import time
+
+    pipe, dims, tick = _three_tables(spark, fixtures, str(tmp_path / "wh"))
+    before = _py4j_threads(spark)
+    assert before >= 1  # at least the calling thread's own connection
+    for v in range(10, 15):
+        results = pipe.run_incremental(tick(v), dims)
+        assert not [r for r in results if r.error], results
+    # a connection closes once its Python thread is gone: allow the lag
+    deadline = time.monotonic() + 10
+    while (after := _py4j_threads(spark)) > before and time.monotonic() < deadline:
+        time.sleep(0.2)
+    assert after <= before, (before, after)
+
+
+def test_partition_swap_failure_loses_no_partition(spark, tmp_path, monkeypatch):
+    """A failure between a partition's two swap renames (live dir moved
+    aside, new dir not yet in) must not lose that month: the next
+    compaction restores it from .old before dropping stale dirs."""
+    import os
+    import shutil
+
+    from web_api_postgres_etl_spark.operators.quality import table_fingerprint
+
+    path = str(tmp_path / "sink")
+    spark.createDataFrame(
+        [(1, "1401-01", "a", 1), (2, "1401-01", "b", 2), (3, "1401-02", "a", 3)],
+        "id long, j_month string, name string, `meta.version` long",
+    ).write.partitionBy("j_month").parquet(path)
+
+    def state():
+        row = table_fingerprint(spark.read.parquet(path)).first()
+        return row["n_rows"], row["fingerprint"]
+
+    before = state()
+    moves = {"n": 0}
+    real_move = shutil.move
+
+    def flaky_move(src, dst, *a, **k):
+        moves["n"] += 1
+        if moves["n"] == 2:  # the new dir's move into place
+            raise OSError("transient rename failure")
+        return real_move(src, dst, *a, **k)
+
+    pipe = MedallionPipeline(spark, str(tmp_path / "wh"))
+    monkeypatch.setattr(shutil, "move", flaky_move)
+    with pytest.raises(OSError, match="transient"):
+        pipe.compact_partitioned(
+            path, keys=["j_month", "name"], partition_col="j_month",
+            touched=["1401-01", "1401-02"],
+        )
+    monkeypatch.undo()
+    pipe.compact_partitioned(
+        path, keys=["j_month", "name"], partition_col="j_month",
+        touched=["1401-01", "1401-02"],
+    )
+    assert state() == before
+    assert not os.path.exists(path + ".old") and not os.path.exists(path + ".tmp")
+
+
+def test_compact_partitioned_skips_months_the_sink_lacks(spark, tmp_path):
+    """Touched months with no directory are not read (a parquet read of
+    no paths would raise); with none present the call writes nothing."""
+    import os
+
+    path = str(tmp_path / "sink")
+    spark.createDataFrame(
+        [(1, "1401-01", "a", 1), (2, "1401-01", "a", 2)],
+        "id long, j_month string, name string, `meta.version` long",
+    ).write.partitionBy("j_month").parquet(path)
+    pipe = MedallionPipeline(spark, str(tmp_path / "wh"))
+    pipe.compact_partitioned(path, keys=["name"], partition_col="j_month",
+                             touched=["1399-05"])
+    assert spark.read.parquet(path).count() == 2  # untouched, not compacted
+    assert not os.path.exists(path + ".tmp")
+    pipe.compact_partitioned(path, keys=["name"], partition_col="j_month",
+                             touched=["1399-05", "1401-01"])
+    assert [r["meta.version"] for r in spark.read.parquet(path).collect()] == [2]
+
+
+def test_partition_dir_matches_spark_writer(spark, tmp_path):
+    """partition_dir names a partition exactly as Spark's writer does,
+    escapes and the null/empty default included."""
+    import os
+
+    from web_api_postgres_etl_spark.plans.fs import partition_dir
+
+    values = ["1401-01", "a/b", "x:y=z", "50%", "q?*", "tab\there", "br[a]{c}^",
+              "quo'te\"", "a b", "ü", "#h\\", "", None]
+    path = str(tmp_path / "esc")
+    spark.createDataFrame(
+        [(i, v) for i, v in enumerate(values)], "id long, `p:c` string"
+    ).write.partitionBy("p:c").parquet(path)
+    written = {d for d in os.listdir(path) if not d.startswith(("_", "."))}
+    assert written == {partition_dir("p:c", v) for v in values}

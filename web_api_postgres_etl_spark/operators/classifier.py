@@ -109,7 +109,13 @@ def train_quality_classifier(
         maxIter=max_iter,
         standardization=False,   # sparse counts: standardizing densifies
     )
-    return lr.fit(train)
+    model = lr.fit(train)
+    # Drop the training summary: scoring ships the model in every task,
+    # and the summary holds the SparkSession, which stops serializing in
+    # Spark 4.1 once the session has used an Observation (its
+    # ObservationManager field is not serializable). Nothing reads it.
+    model._java_obj.setSummary(train.sparkSession._jvm.scala.Option.empty())
+    return model
 
 
 def score_documents(

@@ -51,3 +51,24 @@ def has_data_files(spark: SparkSession, path: str) -> bool:
         if not (name.startswith("_") or name.startswith(".")):
             return True
     return False
+
+
+# characters Spark's writer percent-escapes in partition directory names
+# (ExternalCatalogUtils.escapePathName): ASCII controls and "#%'*/:=?\^{[]
+_PATH_ESCAPES = frozenset(map(chr, range(1, 32))) | frozenset("\"#%'*/:=?\\\x7f{[]^")
+
+
+def _escape_path_name(s: str) -> str:
+    return "".join(f"%{ord(c):02X}" if c in _PATH_ESCAPES else c for c in s)
+
+
+def partition_dir(col: str, value) -> str:
+    """The ``col=value`` directory name Spark's writer gives a partition
+    (values by their string form; null and "" map to Hive's default
+    partition name)."""
+    v = (
+        "__HIVE_DEFAULT_PARTITION__"
+        if value is None or str(value) == ""
+        else _escape_path_name(str(value))
+    )
+    return f"{_escape_path_name(col)}={v}"

@@ -9,6 +9,12 @@ state (G4: the XCom watermark dict) is a plain dict returned by
 ``WatermarkManager.probe``; fault tolerance (G5) is per-table
 try/except with structured results instead of swallowed prints.
 
+Both runners fan out per table, as the reference's task lists do (one
+Airflow task per table, no order inside a list): independent tables run
+on a bounded thread pool against the one SparkSession, so one table's
+driver-side planning overlaps another's execution. Results are still
+recorded in table order, from the calling thread.
+
 Layering contract (reference's Postgres schemas → path prefixes):
 ``src_*`` raw flattened ingest → ``stg_*`` cleaned/derived →
 ``prd_*`` joined/filtered, partitioned for scale.
@@ -17,9 +23,12 @@ Layering contract (reference's Postgres schemas → path prefixes):
 from __future__ import annotations
 
 from collections.abc import Callable, Mapping
+from concurrent.futures import Future, ThreadPoolExecutor
 from dataclasses import dataclass, field
+from functools import partial
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark import inheritable_thread_target
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.dedup import dedup_last_wins
@@ -31,10 +40,12 @@ from ..functions.math import pct_change
 from ..sources.writers import (
     recover_swap,
     swap_compacted,
+    swap_partitions,
     table_path,
     write_append,
     write_overwrite,
 )
+from .fs import partition_dir, path_exists
 from .watermark import WatermarkManager
 
 TRADES_PROJECTION = [
@@ -259,6 +270,36 @@ class MedallionPipeline:
         return in_range(out, "j_date", self.range_start, self.range_end)
 
     # ------------------------------------------------------ orchestration
+    def _concurrently(self, tasks: list[Callable[[], object]]) -> list[Future]:
+        """Run independent per-table callables at once on this session;
+        return their settled futures in task order.
+
+        The reference's DAGs give each table its own Airflow task, and a
+        task list imposes no order inside it. Here the tables share one
+        SparkSession: while one table's query is analysed and planned on
+        the driver, another's runs on the executors. Each task is wrapped
+        in the calling thread, so it inherits the caller's job group, job
+        description and scheduler pool. The pool is bounded by the
+        session's default parallelism; a single task runs inline."""
+        if len(tasks) <= 1:
+            settled = []
+            for task in tasks:
+                done: Future = Future()
+                try:
+                    done.set_result(task())
+                except Exception as exc:  # noqa: BLE001 — re-raised by result()
+                    done.set_exception(exc)
+                settled.append(done)
+            return settled
+        workers = min(len(tasks), self.spark.sparkContext.defaultParallelism)
+        with ThreadPoolExecutor(max_workers=workers) as pool:
+            # one wrapper per task: each gets its own copy of the caller's
+            # local properties, so no task's changes leak into another's
+            return [
+                pool.submit(inheritable_thread_target(self.spark)(task))
+                for task in tasks
+            ]
+
     def run_full_refresh(
         self, extractors: Mapping[str, Callable[[], DataFrame]]
     ) -> list[RunResult]:
@@ -266,126 +307,136 @@ class MedallionPipeline:
 
         ``extractors`` maps logical table name → callable returning the
         raw (already flattened) frame; the REST fan-out or test fixtures
-        plug in here."""
+        plug in here. Two concurrent phases: every src ingest, then one
+        stg → prd chain per fact table. Results are recorded after each
+        phase, in table order."""
         self.results = []
-        frames: dict[str, DataFrame] = {}
-        for name, fn in extractors.items():
-            def _ingest(fn=fn, name=name):
-                df = fn()
-                write_overwrite(df, table_path(self.warehouse, "src", name))
-                return self.spark.read.parquet(
-                    table_path(self.warehouse, "src", name)
-                )
 
-            # G5: isolate per-table failures; one retry with backoff
-            attempts, frame, err = self._attempt(_ingest)
+        def _ingest(name: str, fn: Callable[[], DataFrame]):
+            path = table_path(self.warehouse, "src", name)
+            # the row count rides on the write itself (no second job);
+            # a fresh unnamed Observation per attempt, so concurrent
+            # ingests never share a name
+            obs = Observation()
+            write_overwrite(fn().observe(obs, F.count(F.lit(1)).alias("rows")), path)
+            return self.spark.read.parquet(path), obs.get["rows"]
+
+        # G5: isolate per-table failures; one retry with backoff
+        ingests = self._concurrently(
+            [partial(self._attempt, partial(_ingest, n, fn)) for n, fn in extractors.items()]
+        )
+        frames: dict[str, DataFrame] = {}
+        for name, fut in zip(extractors, ingests):
+            attempts, got, err = fut.result()
             if err is None:
-                frames[name] = frame
-                self._ok(f"src_{name}", frame.count(), attempts)
+                frames[name], rows = got
+                self._ok(f"src_{name}", rows, attempts)
             else:
                 self._err(f"src_{name}", err, attempts)
-        for t in INSTRUMENT_TYPES:
-            key = f"trades_{t}"
-            if key in frames:
-                stg = self.stage_trades(frames[key])
-                write_overwrite(stg, table_path(self.warehouse, "stg", key))
-        if "news" in frames:
-            write_overwrite(
-                self.stage_news(frames["news"]), table_path(self.warehouse, "stg", "news")
-            )
-            # prd news is the staged frame published as-is (the
-            # reference's create_prd_news is a straight SELECT from
-            # staging — mabna_tables_create.py:259-271), partitioned by
-            # Jalali month so the incremental compactor can repair
-            # per touched month
-            write_overwrite(
-                with_jalali_month(
-                    self.spark.read.parquet(table_path(self.warehouse, "stg", "news"))
-                ),
-                table_path(self.warehouse, "prd", "news"),
-                partition_by=["j_month"],
-            )
-            self._ok("prd_news", None)
-        if "indexvalues" in frames:
-            write_overwrite(
-                self.stage_indexvalues(frames["indexvalues"]),
-                table_path(self.warehouse, "stg", "indexvalues"),
-            )
         dims = {
             d: frames[d]
             for d in ("instruments", "assets", "categories", "exchanges", "indexes")
             if d in frames
         }
         trade_dims = {"instruments", "assets", "categories", "exchanges"}
-        for t in INSTRUMENT_TYPES:
+
+        # each chain returns (prd table, error or None), or None when it
+        # has nothing to publish; an exception it raises propagates
+        def _news():
+            stg_path = table_path(self.warehouse, "stg", "news")
+            write_overwrite(self.stage_news(frames["news"]), stg_path)
+            # prd news is the staged frame published as-is (the
+            # reference's create_prd_news is a straight SELECT from
+            # staging — mabna_tables_create.py:259-271), partitioned by
+            # Jalali month so the incremental compactor can repair
+            # per touched month
+            write_overwrite(
+                with_jalali_month(self.spark.read.parquet(stg_path)),
+                table_path(self.warehouse, "prd", "news"),
+                partition_by=["j_month"],
+            )
+            return "prd_news", None
+
+        def _trades(t: str):
             key = f"trades_{t}"
             stg_path = table_path(self.warehouse, "stg", key)
-            # absent stg table (type not ingested this run) → skip is
-            # the intent — checked explicitly (the watermark.probe
-            # pattern; Spark 4.1's resolver reports a missing path as
-            # UNABLE_TO_INFER_SCHEMA or PATH_NOT_FOUND depending on
-            # context, so exception classification is unreliable).
-            # Scheme-aware probe (plans.fs): a local os.path.exists
-            # would read every stg path on an HDFS/S3 warehouse as
-            # absent and skip ALL prd trades behind a green run.
-            # Any failure reading an EXISTING table (corrupt footer,
+            # absent stg table (type not ingested by this or an earlier
+            # run) → skip is the intent — checked explicitly (the
+            # watermark.probe pattern; Spark 4.1's resolver reports a
+            # missing path as UNABLE_TO_INFER_SCHEMA or PATH_NOT_FOUND
+            # depending on context, so exception classification is
+            # unreliable). Scheme-aware probe (plans.fs): a local
+            # os.path.exists would read every stg path on an HDFS/S3
+            # warehouse as absent and skip ALL prd trades behind a green
+            # run. Any failure reading an EXISTING table (corrupt footer,
             # permissions) surfaces as the table's failure — silently
-            # skipping would leave a stale prd behind a green run
-            # (r13, the _read_index_meta rule).
-            from .fs import path_exists
-
-            if not path_exists(self.spark, stg_path):
-                continue
+            # skipping would leave a stale prd behind a green run (r13,
+            # the _read_index_meta rule).
+            if key in frames:
+                write_overwrite(self.stage_trades(frames[key]), stg_path)
+            elif not path_exists(self.spark, stg_path):
+                return None
             try:
                 stg = self.spark.read.parquet(stg_path)
-            except Exception as exc:
-                self._err(f"prd_{key}", exc)
-                continue
+            except Exception as exc:  # noqa: BLE001 — reported per table
+                return f"prd_{key}", exc
             # require the four specific trade dims (a count-based gate
             # would pass with e.g. {instruments, categories, exchanges,
             # indexes} and then KeyError mid-refresh)
             missing = trade_dims - dims.keys()
             if missing:
-                self._err(
-                    f"prd_{key}",
-                    RuntimeError(f"missing dimension extracts: {sorted(missing)}"),
+                return f"prd_{key}", RuntimeError(
+                    f"missing dimension extracts: {sorted(missing)}"
                 )
-            else:
-                prd = self.produce_trades(
-                    stg,
-                    dims["instruments"],
-                    dims["assets"],
-                    dims["categories"],
-                    dims["exchanges"],
-                    instrument_type=t,
-                )
-                # prd sinks partition by Jalali month so the incremental
-                # compactor can rewrite only touched months (T3 at scale)
-                write_overwrite(
-                    with_jalali_month(prd),
-                    table_path(self.warehouse, "prd", key),
-                    partition_by=["j_month"],
-                )
-                self._ok(f"prd_{key}", None)
-        if "indexvalues" in frames:
+            prd = self.produce_trades(
+                stg,
+                dims["instruments"],
+                dims["assets"],
+                dims["categories"],
+                dims["exchanges"],
+                instrument_type=t,
+            )
+            # prd sinks partition by Jalali month so the incremental
+            # compactor can rewrite only touched months (T3 at scale)
+            write_overwrite(
+                with_jalali_month(prd),
+                table_path(self.warehouse, "prd", key),
+                partition_by=["j_month"],
+            )
+            return f"prd_{key}", None
+
+        def _indexvalues():
+            stg_path = table_path(self.warehouse, "stg", "indexvalues")
+            write_overwrite(self.stage_indexvalues(frames["indexvalues"]), stg_path)
             # same missing-dimension gate as the trades tables: report
             # the failure instead of silently skipping the prd build
             if "indexes" not in dims:
-                self._err(
-                    "prd_indexvalues",
-                    RuntimeError("missing dimension extracts: ['indexes']"),
+                return "prd_indexvalues", RuntimeError(
+                    "missing dimension extracts: ['indexes']"
                 )
+            prd = self.produce_indexvalues(
+                self.spark.read.parquet(stg_path), dims["indexes"]
+            )
+            write_overwrite(
+                with_jalali_month(prd),
+                table_path(self.warehouse, "prd", "indexvalues"),
+                partition_by=["j_month"],
+            )
+            return "prd_indexvalues", None
+
+        chains = [_news] if "news" in frames else []
+        chains += [partial(_trades, t) for t in INSTRUMENT_TYPES]
+        if "indexvalues" in frames:
+            chains.append(_indexvalues)
+        for fut in self._concurrently(chains):
+            published = fut.result()
+            if published is None:
+                continue
+            table, err = published
+            if err is None:
+                self._ok(table, None)
             else:
-                stg = self.spark.read.parquet(
-                    table_path(self.warehouse, "stg", "indexvalues")
-                )
-                prd = self.produce_indexvalues(stg, dims["indexes"])
-                write_overwrite(
-                    with_jalali_month(prd),
-                    table_path(self.warehouse, "prd", "indexvalues"),
-                    partition_by=["j_month"],
-                )
-                self._ok("prd_indexvalues", None)
+                self._err(table, err)
         return self.results
 
     def _append_and_compact(
@@ -420,86 +471,77 @@ class MedallionPipeline:
 
         Mirrors mabna_tables_update.py:383-410 ordering: every append is
         chained with its compaction so re-delivered versions collapse
-        before readers see them.
+        before readers see them. Two concurrent phases: every sink's
+        watermark probe (a probe that raises stops the tick before
+        anything is written), then one chain per table. Results are
+        recorded after the chains finish, in table order.
         """
         self.results = []
-        wm_mgr = WatermarkManager(self.spark, self.warehouse)
-        prd_paths = {
-            f"trades_{t}": table_path(self.warehouse, "prd", f"trades_{t}")
+        watermarks: dict[str, int | None] = {}
+
+        def _run_trades(t: str):
+            key = f"trades_{t}"
+            wm = watermarks.get(key)
+            delta = extractors[key](wm)  # S1 pushdown: server filters > wm
+            stg = self.stage_trades(delta)
+            prd = self.produce_trades(
+                stg,
+                dims["instruments"],
+                dims["assets"],
+                dims["categories"],
+                dims["exchanges"],
+                instrument_type=t,
+                watermark=wm,
+            )
+            self._append_and_compact(prd, prd_paths[key], keys=["j_date", "name"])
+
+        def _run_idx():
+            wm = watermarks.get("indexvalues")
+            delta = extractors["indexvalues"](wm)
+            stg = self.stage_indexvalues(delta)
+            prd = self.produce_indexvalues(stg, dims["indexes"], watermark=wm)
+            self._append_and_compact(
+                prd, prd_paths["indexvalues"], keys=["j_date", "name"]
+            )
+
+        # mabna_tables_update.py:290-330: delta by meta.version →
+        # append → drop_duplicates (j_date, title) keep last; here
+        # the dedup is the window compactor scoped to touched months
+        def _run_news():
+            wm = watermarks.get("news")
+            delta = extractors["news"](wm)
+            stg = self.stage_news(delta)
+            # defensive watermark filter, like trades/indexvalues'
+            # produce_*: an extractor that ignores its wm argument
+            # must not re-append the whole corpus every tick
+            if wm is not None:
+                stg = newer_than(stg, "meta.version", wm)
+            self._append_and_compact(stg, prd_paths["news"], keys=["j_date", "title"])
+
+        chains: dict[str, Callable[[], None]] = {
+            f"trades_{t}": partial(_run_trades, t)
             for t in INSTRUMENT_TYPES
             if f"trades_{t}" in extractors
         }
         if "indexvalues" in extractors:
-            prd_paths["indexvalues"] = table_path(self.warehouse, "prd", "indexvalues")
+            chains["indexvalues"] = _run_idx
         if "news" in extractors:
-            prd_paths["news"] = table_path(self.warehouse, "prd", "news")
-        watermarks = wm_mgr.probe(prd_paths)
+            chains["news"] = _run_news
+        prd_paths = {name: table_path(self.warehouse, "prd", name) for name in chains}
+        wm_mgr = WatermarkManager(self.spark, self.warehouse)
+        probes = self._concurrently(
+            [partial(wm_mgr.probe, {name: path}) for name, path in prd_paths.items()]
+        )
+        for fut in probes:
+            watermarks.update(fut.result())
 
-        for t in INSTRUMENT_TYPES:
-            key = f"trades_{t}"
-            if key not in extractors:
-                continue
-
-            def _run_trades(t=t, key=key):
-                wm = watermarks.get(key)
-                delta = extractors[key](wm)  # S1 pushdown: server filters > wm
-                stg = self.stage_trades(delta)
-                prd = self.produce_trades(
-                    stg,
-                    dims["instruments"],
-                    dims["assets"],
-                    dims["categories"],
-                    dims["exchanges"],
-                    instrument_type=t,
-                    watermark=wm,
-                )
-                self._append_and_compact(
-                    prd, prd_paths[key], keys=["j_date", "name"]
-                )
-
-            attempts, _, err = self._attempt(_run_trades)
+        runs = self._concurrently([partial(self._attempt, fn) for fn in chains.values()])
+        for name, fut in zip(chains, runs):
+            attempts, _, err = fut.result()
             if err is None:
-                self._ok(f"prd_{key}", None, attempts)
+                self._ok(f"prd_{name}", None, attempts)
             else:
-                self._err(f"prd_{key}", err, attempts)
-        if "indexvalues" in extractors:
-
-            def _run_idx():
-                wm = watermarks.get("indexvalues")
-                delta = extractors["indexvalues"](wm)
-                stg = self.stage_indexvalues(delta)
-                prd = self.produce_indexvalues(stg, dims["indexes"], watermark=wm)
-                self._append_and_compact(
-                    prd, prd_paths["indexvalues"], keys=["j_date", "name"]
-                )
-
-            attempts, _, err = self._attempt(_run_idx)
-            if err is None:
-                self._ok("prd_indexvalues", None, attempts)
-            else:
-                self._err("prd_indexvalues", err, attempts)
-        if "news" in extractors:
-            # mabna_tables_update.py:290-330: delta by meta.version →
-            # append → drop_duplicates (j_date, title) keep last; here
-            # the dedup is the window compactor scoped to touched months
-            def _run_news():
-                wm = watermarks.get("news")
-                delta = extractors["news"](wm)
-                stg = self.stage_news(delta)
-                # defensive watermark filter, like trades/indexvalues'
-                # produce_*: an extractor that ignores its wm argument
-                # must not re-append the whole corpus every tick
-                if wm is not None:
-                    stg = newer_than(stg, "meta.version", wm)
-                self._append_and_compact(
-                    stg, prd_paths["news"], keys=["j_date", "title"]
-                )
-
-            attempts, _, err = self._attempt(_run_news)
-            if err is None:
-                self._ok("prd_news", None, attempts)
-            else:
-                self._err("prd_news", err, attempts)
+                self._err(f"prd_{name}", err, attempts)
         return self.results
 
     def compact(self, path: str, keys: list[str]) -> None:
@@ -542,38 +584,39 @@ class MedallionPipeline:
         reference's whole-table rewrite (mabna_tables_update.py:
         271-280).
         """
+        import glob
+
         recover_swap(path)  # drop a stale .tmp (and heal a crashed swap)
-        df = self.spark.read.parquet(path)
         if touched is None:
-            # derive from sink-side freshness if the caller didn't track it
-            touched = [
-                r[0]
-                for r in df.select(qcol(partition_col)).distinct().collect()
+            # derive from the sink's own partition dirs if the caller
+            # didn't track them
+            dirs = sorted(glob.glob(f"{path}/{partition_col}=*"))
+        else:
+            # list ONLY the touched dirs (a root read would list every
+            # month of history); a month the sink lacks has nothing to
+            # compact
+            dirs = [
+                d
+                for d in (
+                    f"{path}/{partition_dir(partition_col, v)}"
+                    for v in dict.fromkeys(touched)
+                )
+                if path_exists(self.spark, d)
             ]
-        scoped = df.filter(qcol(partition_col).isin(touched))
+        if not dirs:
+            return
+        df = self.spark.read.option("basePath", path).parquet(*dirs)
         compacted = dedup_last_wins(
-            scoped, keys, version_col="meta.version", tiebreaker="id"
+            df, keys, version_col="meta.version", tiebreaker="id"
         )
-        # Rewrite ONLY the touched partition dirs, via tmp + atomic-ish
+        # Rewrite ONLY the touched partition dirs, via tmp + per-partition
         # swap (never overwrite a path still referenced by the read plan;
         # same discipline as compact()). On a cluster this maps to
         # dynamic partition overwrite / MERGE on a transactional table.
-        import glob
-        import os
-        import shutil
-
-        tmp = path + ".tmp"
-        (
-            compacted.write.mode("overwrite")
-            .partitionBy(partition_col)
-            .parquet(tmp)
+        compacted.write.mode("overwrite").partitionBy(partition_col).parquet(
+            path + ".tmp"
         )
-        for pdir in glob.glob(f"{tmp}/{partition_col}=*"):
-            dst = os.path.join(path, os.path.basename(pdir))
-            if os.path.exists(dst):
-                shutil.rmtree(dst)
-            shutil.move(pdir, dst)
-        shutil.rmtree(tmp)
+        swap_partitions(path, partition_col)
         self._maybe_refresh_zone_map(path)
 
     def _maybe_refresh_zone_map(self, path: str) -> None:

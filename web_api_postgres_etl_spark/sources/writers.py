@@ -79,16 +79,26 @@ def recover_swap(path: str) -> None:
     The swap sequence (write ``path.tmp`` → move ``path`` → ``path.old``
     → move ``path.tmp`` → ``path`` → rm ``path.old``) has a crash window
     in which ``path`` is gone and the live data sits in ``.old`` (new
-    data in ``.tmp``). Compactors call this at entry: restore ``.old``
-    to ``path`` when ``path`` vanished mid-swap, then drop any stale
-    ``.old``/``.tmp`` so a fresh swap can't nest the live dir inside a
-    leftover or fail on an existing target."""
+    data in ``.tmp``). A partition swap (``swap_partitions``) has one
+    per partition: ``path/<dir>`` gone, its live data in
+    ``.old/<dir>``, while ``.tmp`` still exists. Compactors call this at
+    entry: restore ``.old`` to ``path`` when ``path`` vanished mid-swap,
+    or each ``.old/<dir>`` whose ``path/<dir>`` vanished mid-swap, then
+    drop any stale ``.old``/``.tmp`` so a fresh swap can't nest the live
+    dir inside a leftover or fail on an existing target."""
     import os
     import shutil
 
     old, tmp = path + ".old", path + ".tmp"
     if os.path.exists(old) and not os.path.exists(path):
         shutil.move(old, path)
+    elif os.path.exists(old) and os.path.exists(tmp):
+        # only a partition swap leaves .tmp beside .old and path; a
+        # whole-table swap past its window holds the OLD table in .old,
+        # whose dirs must not come back
+        for name in os.listdir(old):
+            if not os.path.exists(os.path.join(path, name)):
+                shutil.move(os.path.join(old, name), os.path.join(path, name))
     for stale in (old, tmp):
         if os.path.exists(stale):
             shutil.rmtree(stale)
@@ -105,6 +115,28 @@ def swap_compacted(path: str) -> None:
     shutil.move(path, old)
     shutil.move(path + ".tmp", path)
     shutil.rmtree(old)
+
+
+def swap_partitions(path: str, partition_col: str) -> None:
+    """Swap each ``partition_col=*`` dir of ``path.tmp`` into ``path``,
+    the live one first moved aside to ``path.old/<dir>``; drop ``.old``
+    and then ``.tmp`` once all are in. A crash between a partition's
+    two renames leaves its live data in ``.old``, never only in
+    ``.tmp`` (which ``recover_swap`` deletes)."""
+    import glob
+    import os
+    import shutil
+
+    old, tmp = path + ".old", path + ".tmp"
+    os.makedirs(old, exist_ok=True)
+    for pdir in glob.glob(f"{tmp}/{partition_col}=*"):
+        name = os.path.basename(pdir)
+        dst = os.path.join(path, name)
+        if os.path.exists(dst):
+            shutil.move(dst, os.path.join(old, name))
+        shutil.move(pdir, dst)
+    shutil.rmtree(old)
+    shutil.rmtree(tmp)
 
 
 def write_bucketed(
