@@ -88,8 +88,10 @@ RETIRED = [
     # curation_pipeline / training_data_e2e)
     ("j34_semi_anti_join", "SQL_J34"),
     # r6 third wave: frame-sample fan-out → winnow_dup_pairs
-    # (multimodal keeps two driver rows — stats + features; the
-    # sequence+explode fan-out shape also rides s8_dim_date)
+    # (multimodal keeps two driver rows — stats + features; since
+    # s8_dim_date retired too, no driver-graded entry has the
+    # sequence+explode fan-out shape: only the parity of this row and
+    # of s8_dim_date below checks it)
     ("multimodal_frame_sample", "SQL_FRAME_SAMPLE"),
     # r6 fourth wave: tumbling-window agg → scd2_history (the same
     # F.window shape stays driver-visible in t5_watermark_late_drop's
@@ -222,8 +224,12 @@ RETIRED = [
     # table face)
     ("agg_pivot", "SQL_PIVOT"),
     # r14 rotated url_curation here for contamination_report; r15
-    # re-added it to the driver contract (the r14 verdict: no 50-slot
-    # cap), so its parity is driver-checked again and it left this list.
+    # re-added it to the driver contract, so its parity is driver-checked
+    # again and it left this list.
+    # s8_dim_date → classifier_quality, which r15's re-add of
+    # url_curation had pushed to entry 51, outside the driver's
+    # first-50 window (tests/test_dim_date.py pins the generator)
+    ("s8_dim_date", "SQL_S8_DIM_DATE"),
 ]
 
 

@@ -330,19 +330,21 @@ def test_watermark_probe_raises_on_corrupt_sink(spark, tmp_path):
         wm.probe({"t": bad})
 
 
-def test_corrupt_stg_surfaces_as_table_failure(spark, fixtures, tmp_path):
+@pytest.mark.parametrize("fact", ["trades_share", "news", "indexvalues"])
+def test_corrupt_stg_surfaces_as_table_failure(spark, fixtures, tmp_path, fact):
     """r13 (the _read_index_meta rule applied to the prd refresh): an
-    ABSENT stg trades table skips its prd silently (type not ingested
-    this run — the intent), but a CORRUPT one must surface as that
-    table's failure instead of leaving a stale prd behind a green
-    run."""
+    ABSENT stg table skips its prd silently (fact not ingested by this
+    or an earlier run — the intent), but a CORRUPT one must surface as
+    that table's failure instead of leaving a stale prd behind a green
+    run. Every fact follows the same rule."""
     import os
 
     _, instruments, assets, categories, exchanges = fixtures
+    indexes = spark.createDataFrame([("x1", "Index One")], "id string, name string")
     wh = str(tmp_path / "wh")
-    # corrupt stg for one type: the stg_trades_share dir holding a
-    # garbage part file (table_path layout: {wh}/stg_{name})
-    stg_dir = os.path.join(wh, "stg_trades_share")
+    # corrupt stg for one fact: its stg dir holding a garbage part file
+    # (table_path layout: {wh}/stg_{name})
+    stg_dir = os.path.join(wh, f"stg_{fact}")
     os.makedirs(stg_dir)
     with open(os.path.join(stg_dir, "part-00000.parquet"), "w") as fh:
         fh.write("not parquet at all")
@@ -353,15 +355,36 @@ def test_corrupt_stg_surfaces_as_table_failure(spark, fixtures, tmp_path):
             "assets": lambda: assets,
             "categories": lambda: categories,
             "exchanges": lambda: exchanges,
+            "indexes": lambda: indexes,
         }
     )
-    errs = {r.table: r.error for r in pipe.results if r.error}
-    # the corrupt type failed loudly; the 7 absent types skipped
-    assert "prd_trades_share" in errs, pipe.results
-    assert not any(
-        t.startswith("prd_trades_") and t != "prd_trades_share"
-        for t in errs
+    # the corrupt fact failed loudly; every fact without a stg skipped
+    prd = [r for r in pipe.results if r.table.startswith("prd_")]
+    assert [r.table for r in prd] == [f"prd_{fact}"], pipe.results
+    assert prd[0].error
+    assert not [r for r in pipe.results if r.error and r is not prd[0]]
+
+
+def test_refresh_republishes_a_fact_it_did_not_ingest(spark, tmp_path):
+    """A full refresh without a news extractor rebuilds prd_news,
+    unchanged, from the stg_news an earlier refresh left."""
+    import shutil
+
+    news = spark.createDataFrame(
+        [(1, "14010101093000", "Budget passes", "v1 body", 1),
+         (2, "14010202093000", "Markets open", "body", 2)],
+        NEWS_SCHEMA,
     )
+    wh = str(tmp_path / "wh")
+    pipe = MedallionPipeline(spark, wh, range_start="1400/01/01", range_end="1402/01/01")
+    pipe.run_full_refresh({"news": lambda: news})
+    prd = table_path(wh, "prd", "news")
+    before = sorted(map(tuple, spark.read.parquet(prd).collect()))
+    shutil.rmtree(prd)
+
+    results = pipe.run_full_refresh({})
+    assert [(r.table, r.error) for r in results] == [("prd_news", None)]
+    assert sorted(map(tuple, spark.read.parquet(prd).collect())) == before
 
 
 def test_connected_components_raises_when_unconverged(spark):
@@ -1228,6 +1251,28 @@ def _three_tables(spark, fixtures, wh, **kw):
         return {k: (lambda wm, df=df: df) for k, df in rows.items()}
 
     return pipe, dims, tick
+
+
+@pytest.mark.parametrize("fact", ["trades_share", "news", "indexvalues"])
+def test_refresh_keeps_tick_rows_of_a_fact_it_did_not_ingest(spark, fixtures, tmp_path, fact):
+    """A tick appends to prd only, never to stg: a later refresh that
+    does not ingest the ticked fact leaves its prd as is, tick row
+    included, instead of rebuilding it from the older stg. The facts no
+    tick touched still republish from their stg."""
+    pipe, dims, tick = _three_tables(spark, fixtures, str(tmp_path / "wh"))
+    results = pipe.run_incremental({fact: tick(9)[fact]}, dims)
+    assert not [r for r in results if r.error], results
+    prd = table_path(pipe.warehouse, "prd", fact)
+    before = sorted(map(tuple, spark.read.parquet(prd).collect()))
+    assert 9 in {row[-2] for row in before}  # meta.version, then j_month
+
+    results = pipe.run_full_refresh({k: (lambda v=v: v) for k, v in dims.items()})
+    assert not [r for r in results if r.error], results
+    others = [f for f in ("trades_share", "indexvalues", "news") if f != fact]
+    assert [r.table for r in results if r.table.startswith("prd_")] == [
+        f"prd_{f}" for f in others
+    ]
+    assert sorted(map(tuple, spark.read.parquet(prd).collect())) == before
 
 
 def test_concurrent_tick_isolates_a_failing_table(spark, fixtures, tmp_path):

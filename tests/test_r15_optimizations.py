@@ -9,9 +9,8 @@ cannot silently regress it:
   (InMemoryRelation) or streaming source — today enforced by decorator
   placement, here enforced by inspection of every decorated query
   (verdict #8b);
-- the ADVICE items: backtick-quoted fast path in ``normalized_tokens``
-  (non-ASCII column names construct instead of raising ParseException),
-  and the NGram direct-JVM call composing with its fallbacks.
+- the ADVICE item: backtick-quoted fast path in ``normalized_tokens``
+  (non-ASCII column names construct instead of raising ParseException).
 """
 
 from __future__ import annotations
@@ -84,43 +83,6 @@ def test_normalized_tokens_fast_path_quotes_identifier(spark):
     slow = df.select(normalized_tokens(F.col("café")).alias("t")).first()["t"]
     assert fast == slow
     assert fast == ["h", "llo", "w", "rld", "a", "b", "c", "d", "42"]
-
-
-def test_ngram_direct_path_requires_transfer_flag(spark):
-    """ADVICE: the direct-JVM NGram call must be gated on the cache
-    build having transferred params; with the flag off, _shingled falls
-    back to the public transform and still yields correct shingles."""
-    from web_api_postgres_etl_spark.operators import dedup as d
-
-    df = spark.createDataFrame([(1, "a b c d")], ["doc_id", "text"])
-    expected = [["a b", "b c", "c d"]]
-
-    tr = d._ngram_transformer(2)
-    assert tr._sg_direct_ok is True  # transfer succeeded at cache build
-    out = d._shingled(df, "doc_id", "text", 2).select("__sh").collect()
-    assert [r["__sh"] for r in out] == expected
-
-    # flag off -> public API path, same result
-    tr._sg_direct_ok = False
-    try:
-        out = d._shingled(df, "doc_id", "text", 2).select("__sh").collect()
-        assert [r["__sh"] for r in out] == expected
-    finally:
-        tr._sg_direct_ok = True
-
-    # a broken JVM handle must evict + rebuild, not crash
-    class _Boom:
-        def transform(self, *_a, **_k):  # pragma: no cover - raise path
-            raise RuntimeError("stale gateway")
-
-    tr._java_obj_backup = tr._java_obj
-    try:
-        tr._java_obj = _Boom()
-        out = d._shingled(df, "doc_id", "text", 2).select("__sh").collect()
-        assert [r["__sh"] for r in out] == expected
-        assert d._NGRAM_CACHE[2] is not tr, "failure must evict the entry"
-    finally:
-        tr._java_obj = tr._java_obj_backup
 
 
 _ADVERSARIAL_TEXTS = [

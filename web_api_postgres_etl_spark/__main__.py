@@ -29,6 +29,9 @@ import json
 import os
 import sys
 
+from web_api_postgres_etl_spark.plans.pipeline import DIMS as _DIMS
+from web_api_postgres_etl_spark.plans.pipeline import FACTS, MedallionPipeline
+
 
 def _landing_tables(landing: str) -> list[str]:
     names = [
@@ -38,12 +41,6 @@ def _landing_tables(landing: str) -> list[str]:
     if not names:
         raise SystemExit(f"no *.parquet tables found in landing dir {landing!r}")
     return sorted(names)
-
-
-_DIMS = ("instruments", "assets", "categories", "exchanges", "indexes")
-# non-trades tables run_incremental has a delta path for; everything
-# else is full-refresh-only in the runner
-_INCREMENTAL_FACTS = ("indexvalues", "news")
 
 
 def main(argv: list[str] | None = None, spark=None) -> int:
@@ -188,9 +185,6 @@ def main(argv: list[str] | None = None, spark=None) -> int:
         if args.cmd == "compact":
             # manual T3 repair: last-wins dedup, whole-table (rename
             # swap) or scoped to touched partitions (dynamic overwrite)
-            from web_api_postgres_etl_spark.plans.pipeline import (
-                MedallionPipeline,
-            )
             from web_api_postgres_etl_spark.sources.writers import recover_swap
 
             keys = [k.strip() for k in args.keys.split(",") if k.strip()]
@@ -650,7 +644,6 @@ def main(argv: list[str] | None = None, spark=None) -> int:
         from pyspark.sql import functions as F
 
         from web_api_postgres_etl_spark.functions.dates import fa_today
-        from web_api_postgres_etl_spark.plans.pipeline import MedallionPipeline
 
         on_failure = None
         if args.alert_log:
@@ -683,12 +676,10 @@ def main(argv: list[str] | None = None, spark=None) -> int:
 
                 return fn
 
+            # the runner has a delta path for every fact it declares;
+            # everything else is full-refresh-only
             dims = {d: read(d) for d in _DIMS if d in tables}
-            facts = [
-                t for t in tables
-                if t not in _DIMS
-                and (t.startswith("trades_") or t in _INCREMENTAL_FACTS)
-            ]
+            facts = [f.name for f in FACTS if f.name in tables]
             # say so LOUDLY when a landing table has no delta path —
             # silently exiting 0 while a table goes stale is the
             # worst cron failure mode

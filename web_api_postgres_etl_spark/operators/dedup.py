@@ -262,77 +262,22 @@ def _shingled(
     inputs that are already join/shuffle outputs (their partitioning is
     set by the upstream plan, and the ``df.rdd`` probe would force a
     driver-side physical planning of that whole subtree per call)."""
+    from pyspark.ml.feature import NGram
+
     src = ensure_parallelism(df) if ensure_par else df
     if drop_empty:
         src = src.filter(F.size(normalized_tokens(text_col)) >= n)
     toks = src.select(
         qcol(id_col).alias("__id"),
         # coalesce: NULL text tokenizes to NULL, and NGram's Scala UDF
-        # NPEs on a NULL array where the HOF form yielded [] — pin the
-        # empty-array behavior for both implementations
+        # NPEs on a NULL array where word_shingles yields [] — keep that
+        # empty-array behavior
         F.coalesce(
             normalized_tokens(text_col), F.array().cast("array<string>")
         ).alias("__toks"),
     )
-    try:
-        from pyspark.ml.feature import NGram  # noqa: F401
-    except ImportError:  # pyspark.ml needs numpy; stay pure-Column without
-        return toks.select(
-            "__id", word_shingles(F.col("__toks"), n).alias("__sh")
-        )
-    # JavaTransformer.transform == transfer params + wrap the JVM call;
-    # params were transferred once at cache build (they never change),
-    # so call the JVM transform directly: ~90 py4j round trips → 2.
-    # Same JVM entry point, same plan. r15 (ADVICE): the direct path is
-    # taken ONLY when the cache build transferred params successfully
-    # (_sg_direct_ok — a transfer-less _java_obj would transform with
-    # Java-default params), ANY failure falls back to the public
-    # transform (a stale _java_obj after a py4j gateway restart raises
-    # Py4JError, not AttributeError), and a failure evicts the cache
-    # entry so the retry rebuilds against the live gateway.
-    for attempt in (0, 1):
-        tr = _ngram_transformer(n)
-        try:
-            if getattr(tr, "_sg_direct_ok", False):
-                sh = DataFrame(
-                    tr._java_obj.transform(toks._jdf), toks.sparkSession
-                )
-            else:
-                sh = tr.transform(toks)
-            break
-        except Exception:  # pragma: no cover - stale JVM handle
-            _NGRAM_CACHE.pop(n, None)
-            if attempt:
-                raise
+    sh = NGram(n=n, inputCol="__toks", outputCol="__sh").transform(toks)
     return sh.select("__id", "__sh")
-
-
-# Reused NGram transformer per n (guide §1.2 step 2): the transformer
-# is stateless configuration — (n, inputCol, outputCol) — and transform
-# only wraps the DataFrame, so one instance per n serves every call.
-# Constructing a fresh NGram costs ~60 py4j round trips (JVM object +
-# uid + param defaults), paid per _shingled call on the bench's
-# unmemoized dedup constructions. Keyed by n only because inputCol/
-# outputCol are fixed internal names here.
-_NGRAM_CACHE: dict = {}
-
-
-def _ngram_transformer(n: int):
-    tr = _NGRAM_CACHE.get(n)
-    if tr is None:
-        from pyspark.ml.feature import NGram
-
-        tr = NGram(n=n, inputCol="__toks", outputCol="__sh")
-        # the direct-JVM call at the _shingled call site is only sound
-        # when params actually reached the Java object here (r15 ADVICE:
-        # the fallbacks must compose — transfer failure ⇒ public API)
-        try:
-            tr._transfer_params_to_java()
-            tr._sg_direct_ok = True
-        except AttributeError:
-            tr._sg_direct_ok = False
-        _NGRAM_CACHE[n] = tr
-    return tr
 
 
 def minhash_signature(shingles_col, num_hashes: int = 16):
@@ -929,6 +874,8 @@ def duplicated_window_positions(
     avoid the second pass would write an intermediate larger than the
     corpus itself. ``.persist()`` the input df for small corpora if
     the source scan dominates."""
+    from pyspark.ml.feature import NGram
+
     if k < 1:
         raise ValueError(f"k must be >= 1, got {k}")
     if min_count < 2:
@@ -940,14 +887,7 @@ def duplicated_window_positions(
             F.array().cast("array<string>"),
         ).alias("__w"),
     )
-    try:
-        from pyspark.ml.feature import NGram
-
-        grams = NGram(n=k, inputCol="__w", outputCol="__g").transform(words)
-    except ImportError:  # pure-Column fallback (pyspark.ml needs numpy)
-        grams = words.select(
-            "__id", "__w", word_shingles(F.col("__w"), k).alias("__g")
-        )
+    grams = NGram(n=k, inputCol="__w", outputCol="__g").transform(words)
     windows = grams.select(
         "__id", F.posexplode("__g").alias("__p0", "__gram")
     ).select(

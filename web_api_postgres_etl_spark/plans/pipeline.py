@@ -3,17 +3,19 @@
 The reference's two Airflow DAGs (mabna_tables_create.py:303-322 —
 manual full refresh; mabna_tables_update.py:383-410 — 15-min cron
 incremental) become two methods over the same operator library. The
-config fan-out (G3: for title → for item → for instrument type,
-mabna_tables_create.py:80-90) drives which tables exist; cross-task
-state (G4: the XCom watermark dict) is a plain dict returned by
-``WatermarkManager.probe``; fault tolerance (G5) is per-table
-try/except with structured results instead of swallowed prints.
+fact tables are declared once, in ``FACTS``, from the config's
+instrument types (G3: constants.yaml drives which tables exist, and
+both DAGs loop over it — mabna_tables_create.py:80-90); each runner
+drives every fact through one chain. Cross-task state (G4: the XCom
+watermark dict) is a plain dict returned by ``WatermarkManager.probe``;
+fault tolerance (G5) is per-table try/except with structured results
+instead of swallowed prints.
 
 Both runners fan out per table, as the reference's task lists do (one
 Airflow task per table, no order inside a list): independent tables run
 on a bounded thread pool against the one SparkSession, so one table's
 driver-side planning overlaps another's execution. Results are still
-recorded in table order, from the calling thread.
+recorded in ``FACTS`` order, from the calling thread.
 
 Layering contract (reference's Postgres schemas → path prefixes):
 ``src_*`` raw flattened ingest → ``stg_*`` cleaned/derived →
@@ -31,6 +33,8 @@ from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
+from ..config import DEFAULT_CONFIG
+from ..operators.aggregates import max_watermark
 from ..operators.dedup import dedup_last_wins
 from ..operators.filters import drop_required_nulls, in_range, newer_than
 from ..operators.joins import star_join
@@ -68,10 +72,6 @@ INDEXVALUES_REQUIRED = [
     "close_value_change", "index.id",
 ]
 
-INSTRUMENT_TYPES = [
-    "share", "bond", "future", "intellectual_property", "energy",
-    "commodity", "currency", "crypto",
-]  # constants.yaml:11-19
 NO_DETAIL_TYPES = {"commodity", "currency"}  # mabna_tables_update.py:250-251
 
 
@@ -85,6 +85,62 @@ def with_jalali_month(df: DataFrame) -> DataFrame:
             F.col("j_date").substr(1, 4), F.lit("-"), F.col("j_date").substr(6, 2)
         ),
     )
+
+
+@dataclass(frozen=True)
+class Fact:
+    """One fact table: its ``src_/stg_/prd_`` name, how its src frame
+    is staged, how its prd frame is produced from the staged frame plus
+    the dims, the dims that needs, and the key the incremental compactor
+    keeps the last version of. ``stage`` and ``produce`` call through
+    the pipeline they are handed, so the methods they name resolve on
+    the instance at call time."""
+
+    name: str
+    stage: Callable[["MedallionPipeline", DataFrame], DataFrame]
+    produce: Callable[["MedallionPipeline", DataFrame, Mapping[str, DataFrame]], DataFrame]
+    dims: tuple[str, ...]
+    keys: tuple[str, ...]
+
+
+TRADE_DIMS = ("instruments", "assets", "categories", "exchanges")
+
+
+def _trades_fact(instrument_type: str) -> Fact:
+    return Fact(
+        f"trades_{instrument_type}",
+        lambda pipe, src: pipe.stage_trades(src),
+        lambda pipe, stg, dims: pipe.produce_trades(
+            stg, *(dims[d] for d in TRADE_DIMS), instrument_type=instrument_type
+        ),
+        TRADE_DIMS,
+        ("j_date", "name"),
+    )
+
+
+FACTS: tuple[Fact, ...] = (
+    *(_trades_fact(t) for t in DEFAULT_CONFIG["instrument_types"]),
+    Fact(
+        "indexvalues",
+        lambda pipe, src: pipe.stage_indexvalues(src),
+        lambda pipe, stg, dims: pipe.produce_indexvalues(stg, dims["indexes"]),
+        ("indexes",),
+        ("j_date", "name"),
+    ),
+    # prd news is the staged frame as-is (the reference's create_prd_news
+    # is a straight SELECT from staging — mabna_tables_create.py:259-271);
+    # updates keep the last version per (j_date, title) —
+    # mabna_tables_update.py:290-330
+    Fact(
+        "news",
+        lambda pipe, src: pipe.stage_news(src),
+        lambda pipe, stg, dims: stg,
+        (),
+        ("j_date", "title"),
+    ),
+)
+# every dimension a fact joins, in first-use order
+DIMS = tuple(dict.fromkeys(d for fact in FACTS for d in fact.dims))
 
 
 @dataclass
@@ -201,14 +257,11 @@ class MedallionPipeline:
         categories: DataFrame,
         exchanges: DataFrame,
         instrument_type: str = "share",
-        watermark: int | None = None,
     ) -> DataFrame:
-        """J1 star join + P2 aliases + P5 range (+P6 watermark) —
+        """J1 star join + P2 aliases + P5 range —
         mabna_tables_create.py:226-248 / mabna_tables_update.py:229-251.
         All dims broadcast: fact never shuffles."""
         fact = stg_trades
-        if watermark is not None:
-            fact = newer_than(fact, "meta.version", watermark)
         joined = star_join(
             fact,
             [
@@ -244,13 +297,9 @@ class MedallionPipeline:
             out = out.drop("code", "isin", "trade_count", "volume", "value")
         return out
 
-    def produce_indexvalues(
-        self, stg_iv: DataFrame, indexes: DataFrame, watermark: int | None = None
-    ) -> DataFrame:
+    def produce_indexvalues(self, stg_iv: DataFrame, indexes: DataFrame) -> DataFrame:
         """J2 (mabna_tables_create.py:282-291)."""
         fact = stg_iv
-        if watermark is not None:
-            fact = newer_than(fact, "meta.version", watermark)
         joined = fact.join(
             F.broadcast(indexes), qcol("index.id") == indexes["id"], "inner"
         )
@@ -308,8 +357,8 @@ class MedallionPipeline:
         ``extractors`` maps logical table name → callable returning the
         raw (already flattened) frame; the REST fan-out or test fixtures
         plug in here. Two concurrent phases: every src ingest, then one
-        stg → prd chain per fact table. Results are recorded after each
-        phase, in table order."""
+        stg → prd chain per fact in ``FACTS``. Results are recorded after
+        each phase: src in extractor order, prd in ``FACTS`` order."""
         self.results = []
 
         def _ingest(name: str, fn: Callable[[], DataFrame]):
@@ -333,111 +382,76 @@ class MedallionPipeline:
                 self._ok(f"src_{name}", rows, attempts)
             else:
                 self._err(f"src_{name}", err, attempts)
-        dims = {
-            d: frames[d]
-            for d in ("instruments", "assets", "categories", "exchanges", "indexes")
-            if d in frames
-        }
-        trade_dims = {"instruments", "assets", "categories", "exchanges"}
+        dims = {d: frames[d] for d in DIMS if d in frames}
 
-        # each chain returns (prd table, error or None), or None when it
-        # has nothing to publish; an exception it raises propagates
-        def _news():
-            stg_path = table_path(self.warehouse, "stg", "news")
-            write_overwrite(self.stage_news(frames["news"]), stg_path)
-            # prd news is the staged frame published as-is (the
-            # reference's create_prd_news is a straight SELECT from
-            # staging — mabna_tables_create.py:259-271), partitioned by
-            # Jalali month so the incremental compactor can repair
-            # per touched month
-            write_overwrite(
-                with_jalali_month(self.spark.read.parquet(stg_path)),
-                table_path(self.warehouse, "prd", "news"),
-                partition_by=["j_month"],
-            )
-            return "prd_news", None
-
-        def _trades(t: str):
-            key = f"trades_{t}"
-            stg_path = table_path(self.warehouse, "stg", key)
-            # absent stg table (type not ingested by this or an earlier
-            # run) → skip is the intent — checked explicitly (the
-            # watermark.probe pattern; Spark 4.1's resolver reports a
-            # missing path as UNABLE_TO_INFER_SCHEMA or PATH_NOT_FOUND
-            # depending on context, so exception classification is
-            # unreliable). Scheme-aware probe (plans.fs): a local
-            # os.path.exists would read every stg path on an HDFS/S3
-            # warehouse as absent and skip ALL prd trades behind a green
-            # run. Any failure reading an EXISTING table (corrupt footer,
+        def _publish(fact: Fact) -> tuple[bool, Exception | None]:
+            """One fact's stg → prd chain: (published, error). An
+            exception it raises propagates."""
+            stg_path = table_path(self.warehouse, "stg", fact.name)
+            prd_path = table_path(self.warehouse, "prd", fact.name)
+            # a fact this run did not ingest republishes from the stg an
+            # earlier run left, unless ticks have appended to its prd
+            # since (_holds_tick_rows); it is skipped when there is no
+            # stg — checked explicitly (the watermark.probe pattern;
+            # Spark 4.1's resolver reports a missing path as
+            # UNABLE_TO_INFER_SCHEMA or PATH_NOT_FOUND depending on
+            # context, so exception classification is unreliable).
+            # Scheme-aware probe (plans.fs): a local os.path.exists would
+            # read every stg path on an HDFS/S3 warehouse as absent and
+            # skip ALL prds behind a green run.
+            ingested = fact.name in frames
+            if ingested:
+                write_overwrite(fact.stage(self, frames[fact.name]), stg_path)
+            elif not path_exists(self.spark, stg_path):
+                return False, None
+            # require each specific dim (a count-based gate would pass
+            # with e.g. {instruments, categories, exchanges, indexes} and
+            # then KeyError mid-refresh)
+            missing = set(fact.dims) - dims.keys()
+            if missing:
+                return True, RuntimeError(f"missing dimension extracts: {sorted(missing)}")
+            # any failure reading an EXISTING stg (corrupt footer,
             # permissions) surfaces as the table's failure — silently
             # skipping would leave a stale prd behind a green run (r13,
-            # the _read_index_meta rule).
-            if key in frames:
-                write_overwrite(self.stage_trades(frames[key]), stg_path)
-            elif not path_exists(self.spark, stg_path):
-                return None
+            # the _read_index_meta rule)
             try:
                 stg = self.spark.read.parquet(stg_path)
             except Exception as exc:  # noqa: BLE001 — reported per table
-                return f"prd_{key}", exc
-            # require the four specific trade dims (a count-based gate
-            # would pass with e.g. {instruments, categories, exchanges,
-            # indexes} and then KeyError mid-refresh)
-            missing = trade_dims - dims.keys()
-            if missing:
-                return f"prd_{key}", RuntimeError(
-                    f"missing dimension extracts: {sorted(missing)}"
-                )
-            prd = self.produce_trades(
-                stg,
-                dims["instruments"],
-                dims["assets"],
-                dims["categories"],
-                dims["exchanges"],
-                instrument_type=t,
-            )
+                return True, exc
+            prd = fact.produce(self, stg, dims)
+            if not ingested and self._holds_tick_rows(prd_path, prd):
+                return False, None
             # prd sinks partition by Jalali month so the incremental
             # compactor can rewrite only touched months (T3 at scale)
-            write_overwrite(
-                with_jalali_month(prd),
-                table_path(self.warehouse, "prd", key),
-                partition_by=["j_month"],
-            )
-            return f"prd_{key}", None
+            write_overwrite(with_jalali_month(prd), prd_path, partition_by=["j_month"])
+            return True, None
 
-        def _indexvalues():
-            stg_path = table_path(self.warehouse, "stg", "indexvalues")
-            write_overwrite(self.stage_indexvalues(frames["indexvalues"]), stg_path)
-            # same missing-dimension gate as the trades tables: report
-            # the failure instead of silently skipping the prd build
-            if "indexes" not in dims:
-                return "prd_indexvalues", RuntimeError(
-                    "missing dimension extracts: ['indexes']"
-                )
-            prd = self.produce_indexvalues(
-                self.spark.read.parquet(stg_path), dims["indexes"]
-            )
-            write_overwrite(
-                with_jalali_month(prd),
-                table_path(self.warehouse, "prd", "indexvalues"),
-                partition_by=["j_month"],
-            )
-            return "prd_indexvalues", None
-
-        chains = [_news] if "news" in frames else []
-        chains += [partial(_trades, t) for t in INSTRUMENT_TYPES]
-        if "indexvalues" in frames:
-            chains.append(_indexvalues)
-        for fut in self._concurrently(chains):
-            published = fut.result()
-            if published is None:
+        published = self._concurrently([partial(_publish, fact) for fact in FACTS])
+        for fact, fut in zip(FACTS, published):
+            done, err = fut.result()
+            if not done:
                 continue
-            table, err = published
             if err is None:
-                self._ok(table, None)
+                self._ok(f"prd_{fact.name}", None)
             else:
-                self._err(table, err)
+                self._err(f"prd_{fact.name}", err)
         return self.results
+
+    def _holds_tick_rows(self, path: str, republished: DataFrame) -> bool:
+        """Whether the prd at ``path`` holds rows that a tick appended
+        after the stg behind ``republished`` was published. A tick
+        appends to prd only (never to stg), and only rows newer than the
+        prd's watermark, so such a prd's watermark is past the newest
+        row of ``republished``; republishing would drop those rows. A
+        prd that is missing or cannot be probed (corrupt) is rebuilt."""
+        try:
+            wm = WatermarkManager(self.spark, self.warehouse).probe({path: path})[path]
+        except Exception:  # noqa: BLE001 — a corrupt prd is rebuilt
+            return False
+        if wm is None:
+            return False
+        newest = max_watermark(republished)
+        return newest is None or wm > newest
 
     def _append_and_compact(
         self, prd: DataFrame, path: str, keys: list[str]
@@ -473,75 +487,41 @@ class MedallionPipeline:
         chained with its compaction so re-delivered versions collapse
         before readers see them. Two concurrent phases: every sink's
         watermark probe (a probe that raises stops the tick before
-        anything is written), then one chain per table. Results are
-        recorded after the chains finish, in table order.
+        anything is written), then one chain per fact that has an
+        extractor. Results are recorded after the chains finish, in
+        ``FACTS`` order.
         """
         self.results = []
-        watermarks: dict[str, int | None] = {}
-
-        def _run_trades(t: str):
-            key = f"trades_{t}"
-            wm = watermarks.get(key)
-            delta = extractors[key](wm)  # S1 pushdown: server filters > wm
-            stg = self.stage_trades(delta)
-            prd = self.produce_trades(
-                stg,
-                dims["instruments"],
-                dims["assets"],
-                dims["categories"],
-                dims["exchanges"],
-                instrument_type=t,
-                watermark=wm,
-            )
-            self._append_and_compact(prd, prd_paths[key], keys=["j_date", "name"])
-
-        def _run_idx():
-            wm = watermarks.get("indexvalues")
-            delta = extractors["indexvalues"](wm)
-            stg = self.stage_indexvalues(delta)
-            prd = self.produce_indexvalues(stg, dims["indexes"], watermark=wm)
-            self._append_and_compact(
-                prd, prd_paths["indexvalues"], keys=["j_date", "name"]
-            )
-
-        # mabna_tables_update.py:290-330: delta by meta.version →
-        # append → drop_duplicates (j_date, title) keep last; here
-        # the dedup is the window compactor scoped to touched months
-        def _run_news():
-            wm = watermarks.get("news")
-            delta = extractors["news"](wm)
-            stg = self.stage_news(delta)
-            # defensive watermark filter, like trades/indexvalues'
-            # produce_*: an extractor that ignores its wm argument
-            # must not re-append the whole corpus every tick
-            if wm is not None:
-                stg = newer_than(stg, "meta.version", wm)
-            self._append_and_compact(stg, prd_paths["news"], keys=["j_date", "title"])
-
-        chains: dict[str, Callable[[], None]] = {
-            f"trades_{t}": partial(_run_trades, t)
-            for t in INSTRUMENT_TYPES
-            if f"trades_{t}" in extractors
-        }
-        if "indexvalues" in extractors:
-            chains["indexvalues"] = _run_idx
-        if "news" in extractors:
-            chains["news"] = _run_news
-        prd_paths = {name: table_path(self.warehouse, "prd", name) for name in chains}
+        facts = [fact for fact in FACTS if fact.name in extractors]
+        prd_paths = {f.name: table_path(self.warehouse, "prd", f.name) for f in facts}
         wm_mgr = WatermarkManager(self.spark, self.warehouse)
         probes = self._concurrently(
             [partial(wm_mgr.probe, {name: path}) for name, path in prd_paths.items()]
         )
+        watermarks: dict[str, int | None] = {}
         for fut in probes:
             watermarks.update(fut.result())
 
-        runs = self._concurrently([partial(self._attempt, fn) for fn in chains.values()])
-        for name, fut in zip(chains, runs):
+        def _tick(fact: Fact) -> None:
+            wm = watermarks.get(fact.name)
+            delta = extractors[fact.name](wm)  # S1 pushdown: server filters > wm
+            stg = fact.stage(self, delta)
+            # defensive watermark filter (P6): an extractor that ignores
+            # its wm argument must not re-append the whole corpus every
+            # tick
+            if wm is not None:
+                stg = newer_than(stg, "meta.version", wm)
+            self._append_and_compact(
+                fact.produce(self, stg, dims), prd_paths[fact.name], keys=list(fact.keys)
+            )
+
+        runs = self._concurrently([partial(self._attempt, partial(_tick, f)) for f in facts])
+        for fact, fut in zip(facts, runs):
             attempts, _, err = fut.result()
             if err is None:
-                self._ok(f"prd_{name}", None, attempts)
+                self._ok(f"prd_{fact.name}", None, attempts)
             else:
-                self._err(f"prd_{name}", err, attempts)
+                self._err(f"prd_{fact.name}", err, attempts)
         return self.results
 
     def compact(self, path: str, keys: list[str]) -> None:
