@@ -5922,7 +5922,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "t1_streaming_compact": q_t1_streaming_compact,
         # r10: o2_dedup_last_wins -> cdc_table_apply (the last-wins
         # window stays driver-visible inside t1_streaming_compact's
-        # compact_batch and this entry's own within-batch fold;
+        # compactor, MedallionPipeline.compact_partitioned, and this
+        # entry's own within-batch fold;
         # retired parity in tests/test_oracle_parity.py). The CDC row
         # hashes a maintained table after a multi-batch replayed
         # change log — the surgical-upsert + conditional-gate family.

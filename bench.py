@@ -36,16 +36,19 @@ class _TaskTimeProbe:
     — is the denominator that makes core-scaling diagnosable: if task
     time >> wall the query parallelizes; if task time ≈ wall it is
     serial or overhead-bound. Snapshots are taken OUTSIDE the timed
-    window, so the wall numbers are untouched; the stage walk
-    early-stops at already-seen stage ids (the store lists stages in
-    descending id order), keeping py4j cost bounded by new stages.
-    Best-effort: any internals change degrades exec_ms to None, never
-    breaks the bench.
+    window, so the wall numbers are untouched. Each COMPLETE stage is
+    counted once, by id: a stage the listener bus marks complete only
+    after a higher-id stage is still counted (on the next call). The
+    walk early-stops below the lowest stage id still running at the
+    last call (the store lists stages in descending id order), keeping
+    py4j cost bounded by new stages. Best-effort: any internals change
+    degrades exec_ms to None, never breaks the bench.
     """
 
     def __init__(self, spark) -> None:
         self._ok = True
-        self._max_seen = -1
+        self._counted: set[int] = set()
+        self._fence = 0  # every stage below it is counted or never completes
         try:
             sc = spark.sparkContext
             self._store = sc._jsc.sc().statusStore()
@@ -63,16 +66,22 @@ class _TaskTimeProbe:
             stages = self._store.stageList(
                 self._empty, False, False, self._quantiles, self._empty
             )
-            total, top = 0, self._max_seen
+            total, top, running = 0, self._fence - 1, []
             for i in range(stages.size()):
                 s = stages.apply(i)
                 sid = s.stageId()
-                if sid <= self._max_seen:
+                if sid < self._fence:
                     break
                 top = max(top, sid)
-                if str(s.status()) == "COMPLETE":
+                if sid in self._counted:
+                    continue
+                status = str(s.status())
+                if status == "COMPLETE":
                     total += s.executorRunTime()
-            self._max_seen = top
+                    self._counted.add(sid)
+                elif status in ("ACTIVE", "PENDING"):
+                    running.append(sid)
+            self._fence = min(running, default=top + 1)
             return int(total)
         except Exception:
             self._ok = False

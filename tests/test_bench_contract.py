@@ -21,7 +21,7 @@ def test_bench_emits_one_json_line_with_contract_keys():
     )
     proc = subprocess.run(
         [sys.executable, "bench.py"],
-        cwd="/root/repo",
+        cwd=os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
         env=env,
         capture_output=True,
         text=True,
@@ -46,3 +46,54 @@ def test_bench_emits_one_json_line_with_contract_keys():
     assert payload["sf"] == 0.001
     assert len(payload["queries"]) >= 15
     assert all(v >= 0 for v in payload["queries"].values())
+
+
+class _Stage:
+    def __init__(self, sid, status, ms):
+        self._sid, self._status, self._ms = sid, status, ms
+
+    def stageId(self):
+        return self._sid
+
+    def status(self):
+        return self._status
+
+    def executorRunTime(self):
+        return self._ms
+
+
+class _Stages:
+    def __init__(self, stages):
+        self._stages = sorted(stages, key=lambda s: -s.stageId())
+
+    def size(self):
+        return len(self._stages)
+
+    def apply(self, i):
+        return self._stages[i]
+
+
+def test_task_time_probe_counts_a_late_completing_stage_once():
+    """A stage whose completion the listener bus records after a
+    higher-id stage's is counted on the next call, and exactly once
+    (a high-water mark over stage ids would skip it for good)."""
+    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+    from bench import _TaskTimeProbe
+
+    probe = _TaskTimeProbe(None)  # no SparkContext: the store is faked below
+    probe._ok, probe._empty, probe._quantiles = True, None, None
+    snapshots = iter([
+        [_Stage(0, "COMPLETE", 5), _Stage(1, "ACTIVE", 0), _Stage(2, "COMPLETE", 7)],
+        [_Stage(0, "COMPLETE", 5), _Stage(1, "COMPLETE", 11), _Stage(2, "COMPLETE", 7)],
+        [_Stage(0, "COMPLETE", 5), _Stage(1, "COMPLETE", 11), _Stage(2, "COMPLETE", 7),
+         _Stage(3, "SKIPPED", 0), _Stage(4, "COMPLETE", 13)],
+        [_Stage(0, "COMPLETE", 5), _Stage(1, "COMPLETE", 11), _Stage(2, "COMPLETE", 7),
+         _Stage(3, "SKIPPED", 0), _Stage(4, "COMPLETE", 13)],
+    ])
+
+    class _Store:
+        def stageList(self, *_args):
+            return _Stages(next(snapshots))
+
+    probe._store = _Store()
+    assert [probe.delta_ms() for _ in range(4)] == [12, 11, 13, 0]

@@ -312,7 +312,7 @@ def test_maintain_history_bootstrap_and_fold(spark, tmp_path):
 
 
 def test_maintain_history_recovers_crashed_swap(spark, tmp_path):
-    """Review regression: a crash in swap_compacted's rename window
+    """Regression: a crash in replace_table's rename window
     leaves the live history in .old and the path missing — the next
     fold must RECOVER it, not misread the gap as a bootstrap and
     rebuild from the new batch alone."""

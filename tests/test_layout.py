@@ -469,7 +469,7 @@ def test_pipeline_compact_keeps_zone_map_fresh(spark, tmp_path):
     spark.range(200, 250).selectExpr(
         "id", "id % 50 AS k", "id AS `meta.version`", "id % 97 AS v"
     ).write.mode("append").parquet(path)
-    pipe.compact(path, keys=["k"])
+    pipe.compact_partitioned(path, keys=["k"])
     zm = read_zone_map(spark, path)
     live = {os.path.basename(p) for p in glob.glob(os.path.join(path, "part-*"))}
     mapped = {os.path.basename(r["file"]) for r in zm.select("file").collect()}

@@ -145,7 +145,7 @@ RETIRED = [
     # coverage keeps this row + test_operators' ground truth)
     ("f3_struct_array", "SQL_F3_STRUCT"),
     # r10: O2 last-wins window → cdc_table_apply (the same window
-    # stays driver-visible inside t1_streaming_compact's compact_batch
+    # stays contract-checked inside t1_streaming_compact's compactor
     # and the CDC entry's own within-batch fold; this row keeps the
     # direct events-table face)
     ("o2_dedup_last_wins", "SQL_O2"),

@@ -595,7 +595,7 @@ def test_compact_recovers_from_crashed_swap(spark, tmp_path):
     shutil.move(path, path + ".old")
     df.limit(1).write.parquet(path + ".tmp")
     pipe = MedallionPipeline(spark, str(tmp_path / "wh"))
-    pipe.compact(path, keys=["k"])
+    pipe.compact_partitioned(path, keys=["k"])
     out = spark.read.parquet(path)
     assert out.count() == 1 and out.first()["meta.version"] == 2
     import os
@@ -880,6 +880,48 @@ def test_cli_compact(spark, tmp_path, capsys):
     ).write.parquet(flat)
     assert main(["compact", "--table", flat, "--keys", "name"], spark=spark) == 0
     assert [r["meta.version"] for r in spark.read.parquet(flat).collect()] == [5]
+
+
+def test_cli_compact_without_touched_collapses_every_month(spark, tmp_path, capsys):
+    """--partition-col without --touched compacts every partition. The
+    table is named by a file: URI: the months are found through Spark's
+    own read, not a local directory listing (which finds nothing under
+    a URI, the way it finds nothing on an HDFS/S3 warehouse)."""
+    import json as _json
+
+    from web_api_postgres_etl_spark.__main__ import main
+
+    path = str(tmp_path / "tbl")
+    spark.createDataFrame(
+        [
+            (1, "1401-01", "a", 1), (2, "1401-01", "a", 2),
+            (3, "1401-02", "b", 3), (4, "1401-02", "b", 4), (5, "1401-02", "c", 5),
+        ],
+        "id long, j_month string, name string, `meta.version` long",
+    ).write.partitionBy("j_month").parquet(path)
+    with pytest.raises(SystemExit, match="hive-partitioned"):
+        main(["compact", "--table", "file://" + path, "--keys", "name"], spark=spark)
+    rc = main(
+        ["compact", "--table", "file://" + path, "--keys", "name",
+         "--partition-col", "j_month"],
+        spark=spark,
+    )
+    assert rc == 0
+    out = _json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert (out["rows_before"], out["rows_after"]) == (5, 3)
+    rows = {(r.j_month, r.name): r["meta.version"] for r in spark.read.parquet(path).collect()}
+    assert rows == {("1401-01", "a"): 2, ("1401-02", "b"): 4, ("1401-02", "c"): 5}
+
+
+def test_compact_refuses_a_remote_table_before_writing(spark):
+    """The swap moves directories with os/shutil, so a table on a
+    non-local filesystem is refused at entry, loudly — never a silent
+    no-op that reports success."""
+    pipe = MedallionPipeline(spark, warehouse="")
+    with pytest.raises(ValueError, match="local-filesystem scoped"):
+        pipe.compact_partitioned(
+            "s3a://bucket/prd_news", keys=["title"], partition_col="j_month"
+        )
 
 
 def test_cli_compact_guards(spark, tmp_path):

@@ -12,9 +12,10 @@ margin while catching any O(n²) regression."""
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from tools.scale_probe import probe, scaling_exponents  # noqa: E402
 

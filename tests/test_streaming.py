@@ -63,6 +63,42 @@ def test_streaming_incremental_upsert(spark, tmp_path):
     assert final == {"a": (3, 11.0), "b": (2, 20.0), "c": (4, 30.0)}
 
 
+def test_streaming_sink_keeps_its_zone_map_fresh(spark, tmp_path):
+    """The sink's compaction swaps its files out; a sibling zone-map
+    sidecar is refreshed with it, so the map names exactly the live
+    files after a micro-batch (no dead entries, no unmapped files)."""
+    import glob
+
+    from web_api_postgres_etl_spark.operators.layout import (
+        read_zone_map,
+        write_zone_map,
+        zone_map,
+    )
+
+    src = str(tmp_path / "incoming")
+    sink = str(tmp_path / "sink")
+    ckpt = str(tmp_path / "ckpt")
+    spark.createDataFrame(
+        [(1, "1401/01/01", "a", 1, 10.0), (2, "1401/01/02", "b", 2, 20.0)], SCHEMA
+    ).write.parquet(sink)
+    write_zone_map(zone_map(spark, sink, ["price"]), sink)
+    _write_batch(spark, src, [(3, "1401/01/01", "a", 3, 11.0)], "batch1")
+    q = incremental_stream(
+        spark, src, sink, ckpt, transform=lambda df: df,
+        keys=["j_date", "name"], schema=SCHEMA,
+    )
+    q.awaitTermination(120)
+    assert {r["name"]: r["meta.version"] for r in spark.read.parquet(sink).collect()} == {
+        "a": 3, "b": 2,
+    }
+    live = {os.path.basename(p) for p in glob.glob(os.path.join(sink, "part-*"))}
+    mapped = {
+        os.path.basename(r["file"])
+        for r in read_zone_map(spark, sink).select("file").collect()
+    }
+    assert live and mapped == live
+
+
 def test_dedup_stream_suppresses_in_flight_duplicates(spark, tmp_path):
     """T6: duplicates of (event_id) within the watermark horizon are
     dropped in flight across micro-batches; only first arrivals land."""

@@ -12,17 +12,16 @@ red hash. This tool reproduces that failure mode locally:
 
 from __future__ import annotations
 
+import os
 import sys
 
 import duckdb
 import pandas as pd
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as entrymod  # noqa: E402
 from web_api_postgres_etl_spark.session import get_spark  # noqa: E402
-
-import os
 
 SF = os.environ.get("PARITY_SF_DIR", "/root/testdata/sf0.01")
 TABLES = [
@@ -56,7 +55,7 @@ def main(names: list[str]) -> int:
     if not names:
         names = list(queries)  # oracle-backed compared, rest rows-only
 
-    spark = get_spark(app_name="parity", master="local[8]", shuffle_partitions=8)
+    spark = get_spark(app_name="parity", shuffle_partitions=8)
     con = duckdb.connect()
     for t in TABLES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{SF}/{t}.parquet'")

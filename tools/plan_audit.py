@@ -22,7 +22,7 @@ import os
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as entrymod  # noqa: E402
 from web_api_postgres_etl_spark.session import get_spark  # noqa: E402
@@ -60,7 +60,7 @@ INTENTIONAL_EXACT = {"collocations", "bloom_join_gate",
 
 
 def main(names: list[str]) -> int:
-    spark = get_spark(app_name="plan-audit", master="local[8]", shuffle_partitions=8)
+    spark = get_spark(app_name="plan-audit", shuffle_partitions=8)
     queries = entrymod.queries()
     if not names:
         names = [n for n in queries if n not in EXPENSIVE]

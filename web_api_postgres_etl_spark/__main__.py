@@ -185,7 +185,10 @@ def main(argv: list[str] | None = None, spark=None) -> int:
         if args.cmd == "compact":
             # manual T3 repair: last-wins dedup, whole-table (rename
             # swap) or scoped to touched partitions (dynamic overwrite)
-            from web_api_postgres_etl_spark.sources.writers import recover_swap
+            from web_api_postgres_etl_spark.sources.writers import (
+                _file_local,
+                recover_swap,
+            )
 
             keys = [k.strip() for k in args.keys.split(",") if k.strip()]
             if not keys:
@@ -203,26 +206,23 @@ def main(argv: list[str] | None = None, spark=None) -> int:
             recover_swap(args.table)
             pipe = MedallionPipeline(spark, warehouse="")
             before = spark.read.parquet(args.table).count()
-            if args.partition_col:
-                touched = (
-                    [v.strip() for v in args.touched.split(",")]
-                    if args.touched
-                    else None
+            part_dirs = glob.glob(os.path.join(_file_local(args.table), "*=*"))
+            if part_dirs and not args.partition_col:
+                raise SystemExit(
+                    "compact: table is hive-partitioned "
+                    f"({os.path.basename(part_dirs[0])} …); pass "
+                    "--partition-col or the rewrite would flatten the "
+                    "partition layout"
                 )
-                pipe.compact_partitioned(
-                    args.table, keys=keys,
-                    partition_col=args.partition_col, touched=touched,
-                )
-            else:
-                part_dirs = glob.glob(os.path.join(args.table, "*=*"))
-                if part_dirs:
-                    raise SystemExit(
-                        "compact: table is hive-partitioned "
-                        f"({os.path.basename(part_dirs[0])} …); pass "
-                        "--partition-col or the rewrite would flatten the "
-                        "partition layout"
-                    )
-                pipe.compact(args.table, keys=keys)
+            touched = (
+                [v.strip() for v in args.touched.split(",")]
+                if args.touched
+                else None
+            )
+            pipe.compact_partitioned(
+                args.table, keys=keys,
+                partition_col=args.partition_col, touched=touched,
+            )
             after = spark.read.parquet(args.table).count()
             print(json.dumps({
                 "table": args.table, "rows_before": before,

@@ -255,19 +255,18 @@ def maintain_history(
     builds the initial history from the batch alone). Returns the row
     count of the updated history.
 
-    Write discipline mirrors the pipeline compactor
-    (plans/pipeline.py::compact): the merge reads the table it will
-    replace, so the result is materialized (cache + count), written to
-    ``path.tmp``, and swapped in with two instant renames
-    (sources/writers.py::swap_compacted) — never an in-place overwrite
-    of a frame's own source. At 100 TB keep the history partitioned or
-    bucketed on the keys; ``scd2_merge`` rewrites only the keys the
-    batch touches, and untouched keys stream through the anti-join
-    side unchanged.
+    Write discipline is the pipeline compactor's
+    (plans/pipeline.py::compact_partitioned): the merge reads the table
+    it will replace, so it is written beside it and swapped in with two
+    instant renames (sources/writers.py::replace_table) — never an
+    in-place overwrite of a frame's own source. At 100 TB keep the
+    history partitioned or bucketed on the keys; ``scd2_merge``
+    rewrites only the keys the batch touches, and untouched keys stream
+    through the anti-join side unchanged.
     """
     from pyspark.errors import AnalysisException
 
-    from ..sources.writers import recover_swap, swap_compacted, write_overwrite
+    from ..sources.writers import recover_swap, replace_table, write_overwrite
 
     # repair a crashed prior swap FIRST: in its crash window the live
     # history sits in .old and the path is gone — reading before
@@ -290,12 +289,7 @@ def maintain_history(
     if bootstrap:
         hist = scd2_history(changes, keys, ts_col, attr_cols, seq_col=seq_col)
         write_overwrite(hist, history_path)
-        return spark.read.parquet(history_path).count()
-    merged = scd2_merge(
-        existing, changes, keys, ts_col, attr_cols, seq_col=seq_col
-    ).cache()
-    n = merged.count()  # materialize BEFORE touching the source dir
-    write_overwrite(merged, history_path + ".tmp")
-    merged.unpersist()
-    swap_compacted(history_path)
-    return n
+    else:
+        merged = scd2_merge(existing, changes, keys, ts_col, attr_cols, seq_col=seq_col)
+        replace_table(merged, history_path)
+    return spark.read.parquet(history_path).count()

@@ -35,6 +35,7 @@ from typing import Sequence
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..sources.writers import _file_local
 from .project import qcol
 
 
@@ -257,31 +258,6 @@ def zone_map_update(
     return existing.unionByName(fresh)
 
 
-def _file_local(uri: str) -> str:
-    """file:// URI (or bare path) → local filesystem path — the ONE
-    definition the rewrite ops (purge/upsert/CDC apply) share;
-    zone-map identities stay URIs, only filesystem operations unwrap
-    them. Non-local schemes RAISE: the rewrite ops move part files
-    with os/shutil, and an s3a://-style path passed through unchanged
-    would make os.walk yield nothing — pure-insert upserts would then
-    report success while the rows stay stranded in the .tmp dir
-    (silent data non-landing). These ops are local-filesystem scoped
-    by design; a distributed deployment fronts them with a table
-    format's commit protocol instead."""
-    from urllib.parse import unquote, urlparse
-
-    parsed = urlparse(uri)
-    if parsed.scheme not in ("file", ""):
-        raise ValueError(
-            f"layout rewrite ops are local-filesystem scoped: got "
-            f"{uri!r} (scheme {parsed.scheme!r}) — purge/upsert/"
-            "apply_changes move part files with os/shutil and cannot "
-            "operate on remote URIs; use a table format (Delta/"
-            "Iceberg) for remote surgical rewrites"
-        )
-    return unquote(parsed.path) if parsed.scheme == "file" else uri
-
-
 def _move_parquet_in(frame, tmp: str, base_local: str, pcols: list) -> list:
     """Write ``frame`` to ``tmp`` (partition-aware when ``pcols``) and
     move every part file into the table — the duplicate-on-crash
@@ -368,7 +344,7 @@ def zone_map_path(path: str) -> str:
     """Sidecar location for a table's persisted zone map: a SIBLING
     directory (``<table>._zone_map``), not a child — compaction swaps
     the whole table directory through ``.tmp``/``.old`` renames
-    (writers.swap_compacted), which would silently destroy a child
+    (writers.replace_table), which would silently destroy a child
     sidecar; a sibling survives every table rewrite, and the
     underscore keeps it visibly metadata."""
     return path.rstrip("/") + "._zone_map"
@@ -554,11 +530,11 @@ def compact_small_files(
     path — the sandbox face of a FileSystem.listStatus call; byte
     math is identical on any store). The rewrite is one
     ``coalesce`` — a narrow, shuffle-free merge of existing
-    partitions — through the same .tmp/.old two-rename swap the
-    streaming compactor uses, so readers never observe a missing
-    path. Layout within files is preserved as-read; run
-    ``cluster_by_zorder`` first when re-clustering is wanted."""
-    from ..sources.writers import recover_swap, swap_compacted, write_overwrite
+    partitions — through ``writers.replace_table``, the rewrite every
+    compactor uses, so readers never observe a missing path. Layout
+    within files is preserved as-read; run ``cluster_by_zorder`` first
+    when re-clustering is wanted."""
+    from ..sources.writers import recover_swap, replace_table
 
     recover_swap(path)
     total = 0
@@ -567,14 +543,11 @@ def compact_small_files(
             if not f.startswith(("_", ".")):
                 total += os.path.getsize(os.path.join(root, f))
     n = max(min_files, int(total / target_file_bytes) + (1 if total % target_file_bytes else 0))
-    # no materialization needed: the write targets path + '.tmp' and
-    # the source directory is untouched until the post-write swap, so
-    # the read stays single-pass (coalesce cannot RAISE the partition
-    # count — when the reader already packs the small files into fewer
-    # partitions than n, fewer files come out, which is why the return
-    # value counts what was actually written, not the target)
-    write_overwrite(spark.read.parquet(path).coalesce(n), path + ".tmp")
-    swap_compacted(path)
+    # coalesce cannot RAISE the partition count — when the reader
+    # already packs the small files into fewer partitions than n, fewer
+    # files come out, which is why the return value counts what was
+    # actually written, not the target
+    replace_table(spark.read.parquet(path).coalesce(n), path)
     written = 0
     for root, _dirs, files in os.walk(path):
         written += sum(

@@ -43,8 +43,7 @@ from ..functions.dates import fa_today, jalali_compact_to_slashed
 from ..functions.math import pct_change
 from ..sources.writers import (
     recover_swap,
-    swap_compacted,
-    swap_partitions,
+    replace_table,
     table_path,
     write_append,
     write_overwrite,
@@ -524,53 +523,35 @@ class MedallionPipeline:
                 self._err(f"prd_{fact.name}", err, attempts)
         return self.results
 
-    def compact(self, path: str, keys: list[str]) -> None:
-        """T3 repair: append-then-compact, last version wins (O2).
-
-        The reference rewrites the whole table
-        (mabna_tables_update.py:271-280). Here the rewrite is still
-        table-scoped at test scale, but routed through dedup_last_wins
-        (window, not dropDuplicates); ``compact_partitioned`` below is
-        the 100 TB form (only freshly-touched partitions rewritten).
-        """
-        recover_swap(path)  # heal a crashed prior swap (stale .old/.tmp)
-        df = self.spark.read.parquet(path)
-        compacted = dedup_last_wins(df, keys, version_col="meta.version", tiebreaker="id")
-        compacted.cache().count()  # materialize before overwriting the source dir
-        write_overwrite(compacted, path + ".tmp")
-        # release ONLY this frame (clearCache would drop every cached
-        # DataFrame session-wide), then swap (see writers.swap_compacted)
-        compacted.unpersist()
-        swap_compacted(path)
-        self._maybe_refresh_zone_map(path)
-
     def compact_partitioned(
         self,
         path: str,
         keys: list[str],
-        partition_col: str,
+        partition_col: str | None = None,
         touched: list[str] | None = None,
     ) -> None:
-        """Partition-scoped last-wins compaction — the 100 TB path.
+        """T3 repair: append-then-compact, last version wins (O2) — the
+        one last-wins compactor (incremental runner, streaming sink and
+        CLI all call it).
 
-        The sink is parquet partitioned by ``partition_col`` (for prd
-        tables: a Jalali-month column, e.g. ``substr(j_date,1,7)``
-        written via ``write_append(..., partition_by=[col])``). Only
-        ``touched`` partitions (those present in the delta — known to
-        the incremental runner for free) are window-deduped and
-        rewritten via DYNAMIC partition overwrite; untouched history is
-        never read or written. A 15-minute micro-batch then costs
-        O(delta + touched partitions), not O(table) like the
-        reference's whole-table rewrite (mabna_tables_update.py:
-        271-280).
+        The reference rewrites the whole table
+        (mabna_tables_update.py:271-280); that is the form here without
+        ``partition_col``. A sink partitioned by ``partition_col`` (for
+        prd tables the Jalali month, written via
+        ``write_append(..., partition_by=[col])``) is rewritten one
+        partition dir at a time, and with ``touched`` (the months in the
+        delta — known to the incremental runner for free) only those
+        are read, deduped and rewritten: untouched history is never
+        read or written, so a 15-minute micro-batch costs O(delta +
+        touched partitions), not O(table). Without ``touched`` the
+        whole table is read through Spark (so any filesystem Spark
+        reads lists its partitions) and every partition is rewritten.
         """
-        import glob
-
-        recover_swap(path)  # drop a stale .tmp (and heal a crashed swap)
+        if touched is not None and partition_col is None:
+            raise ValueError("touched requires partition_col")
+        recover_swap(path)  # heal a crashed prior swap (stale .old/.tmp)
         if touched is None:
-            # derive from the sink's own partition dirs if the caller
-            # didn't track them
-            dirs = sorted(glob.glob(f"{path}/{partition_col}=*"))
+            df = self.spark.read.parquet(path)
         else:
             # list ONLY the touched dirs (a root read would list every
             # month of history); a month the sink lacks has nothing to
@@ -583,20 +564,17 @@ class MedallionPipeline:
                 )
                 if path_exists(self.spark, d)
             ]
-        if not dirs:
-            return
-        df = self.spark.read.option("basePath", path).parquet(*dirs)
+            if not dirs:
+                return
+            df = self.spark.read.option("basePath", path).parquet(*dirs)
         compacted = dedup_last_wins(
             df, keys, version_col="meta.version", tiebreaker="id"
         )
-        # Rewrite ONLY the touched partition dirs, via tmp + per-partition
-        # swap (never overwrite a path still referenced by the read plan;
-        # same discipline as compact()). On a cluster this maps to
-        # dynamic partition overwrite / MERGE on a transactional table.
-        compacted.write.mode("overwrite").partitionBy(partition_col).parquet(
-            path + ".tmp"
-        )
-        swap_partitions(path, partition_col)
+        # never overwrite a path still referenced by the read plan: the
+        # rewrite goes beside it and is swapped in (on a cluster this
+        # maps to dynamic partition overwrite / MERGE on a
+        # transactional table)
+        replace_table(compacted, path, partition_col)
         self._maybe_refresh_zone_map(path)
 
     def _maybe_refresh_zone_map(self, path: str) -> None:

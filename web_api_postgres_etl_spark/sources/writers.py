@@ -73,22 +73,49 @@ def read_table(spark: SparkSession, path: str, fmt: str = "parquet") -> DataFram
     return r.load(path)
 
 
-def recover_swap(path: str) -> None:
-    """Repair a crashed compact swap before starting a new one.
+def _file_local(uri: str) -> str:
+    """file:// URI (or bare path) → local filesystem path — the ONE
+    definition every rewrite op shares (the swap below, purge/upsert/
+    CDC apply); zone-map identities stay URIs, only filesystem
+    operations unwrap them. Non-local schemes RAISE: the rewrite ops
+    move directories and part files with os/shutil, and an
+    s3a://-style path passed through unchanged would make every
+    listing come back empty — a compaction would then report success
+    without swapping anything in, or an upsert would strand its rows
+    in the .tmp dir (silent data non-landing). These ops are
+    local-filesystem scoped by design; a distributed deployment fronts
+    them with a table format's commit protocol instead."""
+    from urllib.parse import unquote, urlparse
 
-    The swap sequence (write ``path.tmp`` → move ``path`` → ``path.old``
-    → move ``path.tmp`` → ``path`` → rm ``path.old``) has a crash window
-    in which ``path`` is gone and the live data sits in ``.old`` (new
-    data in ``.tmp``). A partition swap (``swap_partitions``) has one
-    per partition: ``path/<dir>`` gone, its live data in
-    ``.old/<dir>``, while ``.tmp`` still exists. Compactors call this at
-    entry: restore ``.old`` to ``path`` when ``path`` vanished mid-swap,
-    or each ``.old/<dir>`` whose ``path/<dir>`` vanished mid-swap, then
-    drop any stale ``.old``/``.tmp`` so a fresh swap can't nest the live
-    dir inside a leftover or fail on an existing target."""
+    parsed = urlparse(uri)
+    if parsed.scheme not in ("file", ""):
+        raise ValueError(
+            f"table rewrite ops are local-filesystem scoped: got "
+            f"{uri!r} (scheme {parsed.scheme!r}) — compaction/purge/"
+            "upsert/apply_changes move files with os/shutil and cannot "
+            "operate on remote URIs; use a table format (Delta/"
+            "Iceberg) for remote rewrites"
+        )
+    return unquote(parsed.path) if parsed.scheme == "file" else uri
+
+
+def recover_swap(path: str) -> None:
+    """Repair a crashed ``replace_table`` swap before starting a new one.
+
+    The whole-table swap (write ``path.tmp`` → move ``path`` →
+    ``path.old`` → move ``path.tmp`` → ``path`` → rm ``path.old``) has a
+    crash window in which ``path`` is gone and the live data sits in
+    ``.old`` (new data in ``.tmp``). The partition swap has one per
+    partition: ``path/<dir>`` gone, its live data in ``.old/<dir>``,
+    while ``.tmp`` still exists. Rewriters call this at entry: restore
+    ``.old`` to ``path`` when ``path`` vanished mid-swap, or each
+    ``.old/<dir>`` whose ``path/<dir>`` vanished mid-swap, then drop
+    any stale ``.old``/``.tmp`` so a fresh swap can't nest the live dir
+    inside a leftover or fail on an existing target."""
     import os
     import shutil
 
+    path = _file_local(path)
     old, tmp = path + ".old", path + ".tmp"
     if os.path.exists(old) and not os.path.exists(path):
         shutil.move(old, path)
@@ -104,34 +131,39 @@ def recover_swap(path: str) -> None:
             shutil.rmtree(stale)
 
 
-def swap_compacted(path: str) -> None:
-    """Swap ``path.tmp`` into ``path`` via rename-old → move-new →
-    delete-old, so the table path is missing only between two instant
-    renames, never for the whole delete. Pair with ``recover_swap`` at
-    compact entry for crash safety."""
-    import shutil
-
-    old = path + ".old"
-    shutil.move(path, old)
-    shutil.move(path + ".tmp", path)
-    shutil.rmtree(old)
-
-
-def swap_partitions(path: str, partition_col: str) -> None:
-    """Swap each ``partition_col=*`` dir of ``path.tmp`` into ``path``,
-    the live one first moved aside to ``path.old/<dir>``; drop ``.old``
-    and then ``.tmp`` once all are in. A crash between a partition's
-    two renames leaves its live data in ``.old``, never only in
-    ``.tmp`` (which ``recover_swap`` deletes)."""
+def replace_table(
+    df: DataFrame, path: str, partition_col: str | None = None
+) -> None:
+    """Replace the table at ``path`` with ``df`` — the one rewrite every
+    compactor and maintained table uses. ``df`` may read ``path``
+    itself: it is written beside it, to ``path.tmp`` (partitioned by
+    ``partition_col`` when given), so the source is untouched until the
+    write is done and nothing needs materializing first. Then it is
+    swapped in by renames, so readers find the table missing only
+    between two instant renames, never for a whole delete: the whole
+    dir (``path`` → ``.old``, ``.tmp`` → ``path``), or each partition
+    dir written, the live one moved to ``.old/<dir>`` FIRST so a crash
+    between the two renames leaves its data in ``.old``, never only in
+    ``.tmp``. Partitions ``df`` has no rows for stay as they are. Call
+    ``recover_swap(path)`` before reading ``path``."""
     import glob
     import os
     import shutil
 
-    old, tmp = path + ".old", path + ".tmp"
+    local = _file_local(path)
+    write_overwrite(
+        df, path + ".tmp", partition_by=[partition_col] if partition_col else None
+    )
+    old, tmp = local + ".old", local + ".tmp"
+    if partition_col is None:
+        shutil.move(local, old)
+        shutil.move(tmp, local)
+        shutil.rmtree(old)
+        return
     os.makedirs(old, exist_ok=True)
     for pdir in glob.glob(f"{tmp}/{partition_col}=*"):
         name = os.path.basename(pdir)
-        dst = os.path.join(path, name)
+        dst = os.path.join(local, name)
         if os.path.exists(dst):
             shutil.move(dst, os.path.join(old, name))
         shutil.move(pdir, dst)

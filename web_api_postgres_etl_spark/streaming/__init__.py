@@ -1,5 +1,5 @@
 """Structured Streaming face over the incremental path."""
 
-from .incremental import incremental_stream, compact_batch
+from .incremental import incremental_stream
 
-__all__ = ["incremental_stream", "compact_batch"]
+__all__ = ["incremental_stream"]

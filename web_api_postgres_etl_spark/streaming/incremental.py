@@ -20,31 +20,8 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
-from ..operators.dedup import dedup_last_wins
-from ..sources.writers import (
-    recover_swap,
-    swap_compacted,
-    write_append,
-    write_overwrite,
-)
-
-
-def compact_batch(
-    spark: SparkSession,
-    path: str,
-    keys: list[str],
-    version_col: str = "meta.version",
-) -> None:
-    """Read sink → last-wins window dedup → atomic-ish rewrite."""
-    recover_swap(path)  # heal a crashed prior swap (stale .old/.tmp)
-    df = spark.read.parquet(path)
-    compacted = dedup_last_wins(df, keys, version_col=version_col, tiebreaker="id")
-    compacted.cache().count()
-    write_overwrite(compacted, path + ".tmp")
-    # release only this frame; swap via two renames so the path is
-    # missing only for an instant (see sources.writers.swap_compacted)
-    compacted.unpersist()
-    swap_compacted(path)
+from ..plans.pipeline import MedallionPipeline
+from ..sources.writers import write_append
 
 
 def incremental_stream(
@@ -71,11 +48,12 @@ def incremental_stream(
     if schema is not None:
         reader = reader.schema(schema)
     stream = reader.parquet(source_dir)
+    pipe = MedallionPipeline(spark, warehouse="")
 
     def handle(batch_df: DataFrame, batch_id: int) -> None:
         out = transform(batch_df)
         write_append(out, sink_path)
-        compact_batch(spark, sink_path, keys)
+        pipe.compact_partitioned(sink_path, keys)
 
     writer = (
         stream.writeStream.foreachBatch(handle)
