@@ -5712,8 +5712,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # Driver-contract pin note (deliberate): the iterative/temp-dir
     # entries (dedup_clusters, pagerank, cdc_table_apply,
     # cc_incremental_merge, ivf_pq_probe_topk) RETURN their final
-    # localCheckpointed frame — the checkpoint IS the result the
-    # driver collects, so it cannot be released inside the q_ function
+    # localCheckpointed frame, or a frame that reads it (dedup_clusters
+    # left-joins its documents to its final label checkpoint) — the
+    # driver collects from it, so it cannot be released inside the q_ function
     # (release-after-collect is the long-lived-caller path via
     # pins=[]). One small frame stays pinned per driver run; every
     # non-result internal pin is released before return (the hygiene

@@ -276,6 +276,55 @@ def test_components_converge_at_diameter_equal_max_iter(spark):
     assert fast == {1: 1, 2: 1, 3: 1, 4: 1, 5: 1}
 
 
+
+def test_fast_components_label_only_edge_endpoints(spark):
+    """The doubling loop's label table holds one row per distinct edge
+    endpoint, not one per node; nodes in no edge still come back,
+    labeled with themselves."""
+    from web_api_postgres_etl_spark.operators.graph import (
+        connected_components_fast,
+    )
+
+    nodes = spark.createDataFrame([(i,) for i in range(1, 11)], "id long")
+    edges = spark.createDataFrame(
+        [(2, 1), (2, 3), (3, 2), (8, 7)], "id_a long, id_b long"
+    )
+    pins: list = []
+    got = {
+        r["id"]: r["component"]
+        for r in connected_components_fast(nodes, edges, pins=pins).collect()
+    }
+    assert pins[-1].count() == 5  # endpoints 1, 2, 3, 7, 8
+    assert got == {1: 1, 2: 1, 3: 1, 4: 4, 5: 5, 6: 6, 7: 7, 8: 7, 9: 9, 10: 10}
+
+
+def test_fast_components_without_edges_label_every_node_itself(spark):
+    from web_api_postgres_etl_spark.operators.graph import (
+        connected_components_fast,
+    )
+
+    nodes = spark.createDataFrame([(i,) for i in [3, 1, 2]], "id long")
+    edges = spark.createDataFrame([], "id_a long, id_b long")
+    pins: list = []
+    got = sorted(
+        tuple(r) for r in connected_components_fast(nodes, edges, pins=pins).collect()
+    )
+    assert got == [(1, 1), (2, 2), (3, 3)]
+    assert pins[-1].count() == 0
+
+
+def test_fast_components_rows_are_the_nodes_rows(spark):
+    """An edge endpoint that is not a node still connects its component
+    but gets no row: the result has one row per ``nodes`` row."""
+    from web_api_postgres_etl_spark.operators.graph import (
+        connected_components_fast,
+    )
+
+    nodes = spark.createDataFrame([(3,), (1,), (5,)], "id long")
+    edges = spark.createDataFrame([(1, 2), (2, 3)], "id_a long, id_b long")
+    got = sorted(tuple(r) for r in connected_components_fast(nodes, edges).collect())
+    assert got == [(1, 1), (3, 1), (5, 5)]
+
 def test_salted_join_accepts_spark_spellings(spark):
     from web_api_postgres_etl_spark.operators.joins import salted_join
 

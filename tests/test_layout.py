@@ -145,6 +145,24 @@ def test_compact_small_files_roundtrip(spark, tmp_path):
     assert spark.read.parquet(path).count() == 10_000
 
 
+def test_compact_small_files_accepts_file_uri(spark, tmp_path):
+    """A ``file://`` URI is sized and counted like the bare path: the
+    same target gives the same file count (a URI once measured 0 bytes,
+    coalesced to ``min_files`` and reported 0 files written)."""
+    counts = []
+    for name, as_uri in (("bare", False), ("uri", True)):
+        path = str(tmp_path / name)
+        spark.range(10_000).select(
+            F.col("id"), (F.col("id") % 7).alias("g")
+        ).repartition(8).write.parquet(path)
+        size = sum(os.path.getsize(f) for f in glob.glob(os.path.join(path, "*.parquet")))
+        target = path if not as_uri else "file://" + path
+        n = compact_small_files(spark, target, target_file_bytes=size // 3)
+        assert n == len(glob.glob(os.path.join(path, "*.parquet")))
+        assert spark.read.parquet(path).count() == 10_000
+        counts.append(n)
+    assert counts[0] > 1 and counts[1] == counts[0]
+
 def test_zone_map_shape_and_totals(spark, tmp_path):
     from web_api_postgres_etl_spark.operators.layout import zone_map
 

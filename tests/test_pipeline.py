@@ -1545,3 +1545,30 @@ def test_partition_dir_matches_spark_writer(spark, tmp_path):
     ).write.partitionBy("p:c").parquet(path)
     written = {d for d in os.listdir(path) if not d.startswith(("_", "."))}
     assert written == {partition_dir("p:c", v) for v in values}
+
+
+def test_compact_partitioned_swaps_escaped_partition_dirs(spark, tmp_path):
+    """A partition column whose name Spark's writer escapes (``p:m`` is
+    written as ``p%3Am=…``) still has its compacted dirs swapped in:
+    the duplicates collapse, with and without ``touched``, and no
+    ``.tmp`` or ``.old`` is left behind."""
+    import os
+
+    path = str(tmp_path / "sink")
+    spark.createDataFrame(
+        [(1, "m1", "a", 1), (2, "m1", "a", 2), (3, "m2", "b", 1), (4, "m2", "b", 5)],
+        "id long, `p:m` string, name string, `meta.version` long",
+    ).write.partitionBy("p:m").parquet(path)
+    pipe = MedallionPipeline(spark, str(tmp_path / "wh"))
+
+    def versions():
+        return sorted(
+            (r["p:m"], r["meta.version"]) for r in spark.read.parquet(path).collect()
+        )
+
+    pipe.compact_partitioned(path, keys=["name"], partition_col="p:m",
+                             touched=["m1"])
+    assert versions() == [("m1", 2), ("m2", 1), ("m2", 5)]
+    pipe.compact_partitioned(path, keys=["name"], partition_col="p:m")
+    assert versions() == [("m1", 2), ("m2", 5)]
+    assert not os.path.exists(path + ".tmp") and not os.path.exists(path + ".old")

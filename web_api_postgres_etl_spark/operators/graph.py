@@ -10,9 +10,13 @@ clique-ish, so typically 2-3).
 
 Scale notes: each iteration shuffles (node, label) pairs — never
 payloads. Label propagation with min-label converges deterministically
-regardless of partitioning. For billion-edge graphs swap the loop body
-for the large-star/small-star optimization (same join shapes); the
-driver-side loop structure stays.
+regardless of partitioning. The pointer-doubling loop behind
+``dedup_clusters`` iterates over the edge endpoints only and attaches
+every other node with one final left join, so its rounds scale with the
+near-dup population (typically a small share of the corpus), not with
+the document count. For billion-edge graphs swap the loop body for the
+large-star/small-star optimization (same join shapes); the driver-side
+loop structure stays.
 """
 
 from __future__ import annotations
@@ -119,9 +123,10 @@ def connected_components_fast(
     max_iter: int = 12,
     pins: list[DataFrame] | None = None,
 ) -> DataFrame:
-    """(id, component) via pointer doubling — O(log n) rounds.
+    """(id, component) via pointer doubling — O(log n) rounds, iterated
+    over the edge endpoints only.
 
-    Same deterministic result as ``connected_components`` (min reachable
+    Same deterministic labels as ``connected_components`` (min reachable
     node id), but each round follows the label chain one extra hop
     (L(v) ← min over neighbors' labels, then L(v) ← L(L(v))), so a
     chain of length d resolves in ~log2(d) rounds instead of d. This is
@@ -129,77 +134,97 @@ def connected_components_fast(
     rounds cover components of diameter ~4000; the default suits any
     real near-dup graph (clique-ish, diameter ≤ a few dozen).
 
-    Per round: one neighbor-offer join + one pointer-jump join — both
-    equi-joins on (node, label) pairs, payloads never shuffled; the
-    frontier is localCheckpointed so lineage stays flat. One extra
-    quiet round is allowed so convergence on the final productive round
-    is still recognized.
+    One row per ``nodes`` row: a node in no edge labels itself, and an
+    edge endpoint that is not a node still connects its component but
+    gets no row.
+
+    Scale shape: the label table holds only ids that appear in an edge
+    (at most 2·|edges| rows), so the work per round follows the near-dup
+    population, not the node count. The symmetric edge list comes from
+    one scan of ``edges`` (each row exploded into both orientations) and
+    is localCheckpointed once up front, so a lazy upstream pipeline, such
+    as LSH candidate generation, runs once, in its own job. Per round: one
+    neighbor-offer join, one min aggregate that also carries each row's
+    previous label, and one pointer-jump join — equi-joins on (id,
+    label) pairs, payloads never shuffled; the round is
+    localCheckpointed and convergence is read off that checkpoint
+    (``filter(moved).limit(1)``), not by a second join. One extra quiet
+    round is allowed so convergence on the final productive round is
+    still recognized. One left join then attaches every node
+    (``coalesce(component, id)``): the returned frame reads ``nodes``
+    and the final label checkpoint (appended to ``pins``), never the
+    edge list.
     """
-    # pinned for the same reason as the plain-propagation loop: every
-    # doubling round probes the edge list, which may be a lazy upstream
-    # pipeline (LSH candidate generation) if not materialized here
+    a, b = qcol(edge_src), qcol(edge_dst)
     sym = (
-        edges.select(qcol(edge_src).alias("src"), qcol(edge_dst).alias("dst"))
-        .union(edges.select(qcol(edge_dst).alias("src"), qcol(edge_src).alias("dst")))
-        .distinct()
-        .persist()
-    )
-    labels = nodes.select(
-        qcol(node_id).alias("id"), qcol(node_id).alias("component")
-    )
-    changed = 1
-    prev_ckpt = None
-    for _ in range(max_iter + 1):
-        offers = sym.join(labels, sym["src"] == labels["id"]).select(
-            F.col("dst").alias("id"), F.col("component")
+        edges.select(
+            F.explode(
+                F.array(
+                    F.struct(a.alias("src"), b.alias("dst")),
+                    F.struct(b.alias("src"), a.alias("dst")),
+                )
+            ).alias("e")
         )
+        .select("e.src", "e.dst")
+        .distinct()
+        .localCheckpoint(eager=True)
+    )
+    labels = None
+    changed = 1
+    for _ in range(max_iter + 1):
+        if labels is None:
+            # round 1 joins nothing: every endpoint still carries its own
+            # id, so its neighbors offer their ids
+            current = sym.select(F.col("src").alias("id"), F.col("src").alias("component"))
+            offers = sym.select(F.col("src").alias("id"), F.col("dst").alias("component"))
+        else:
+            current = labels.select("id", "component")
+            offers = sym.join(current, sym["src"] == current["id"]).select(
+                F.col("dst").alias("id"), F.col("component")
+            )
         merged = (
-            labels.unionByName(offers)
+            current.withColumn("__own", F.lit(True))
+            .unionByName(offers.withColumn("__own", F.lit(False)))
             .groupBy("id")
-            .agg(F.min("component").alias("component"))
+            .agg(
+                F.min("component").alias("component"),
+                F.min(F.when(F.col("__own"), F.col("component"))).alias("__prev"),
+            )
         )
         # pointer jump: component ← component's own component
         parent = merged.select(
             F.col("id").alias("p_id"), F.col("component").alias("p_comp")
         )
+        jump = F.least("component", "p_comp")
         jumped = (
             merged.join(parent, merged["component"] == parent["p_id"], "left")
-            .select(
-                "id",
-                F.least(
-                    F.col("component"), F.coalesce("p_comp", F.col("component"))
-                ).alias("component"),
-            )
+            .select("id", jump.alias("component"), (jump < F.col("__prev")).alias("__moved"))
+            .localCheckpoint(eager=True)
         )
-        # checkpoint FIRST, then test convergence against the
-        # checkpointed frame — one execution per round, not two
-        jumped = jumped.localCheckpoint(eager=True)
-        changed = (
-            jumped.alias("n")
-            .join(labels.alias("o"), F.col("n.id") == F.col("o.id"))
-            .filter(F.col("n.component") < F.col("o.component"))
-            .limit(1)
-            .count()
-        )
+        changed = jumped.filter(F.col("__moved")).limit(1).count()
         # release the superseded round's checkpoint (see the plain
         # propagation loop) — at most two label tables pinned at once
-        if prev_ckpt is not None:
-            release_frame(prev_ckpt)
-        prev_ckpt = jumped
+        if labels is not None:
+            release_frame(labels)
         labels = jumped
         if changed == 0:
             break
-    sym.unpersist()
-    # the final checkpoint IS the result — the caller's pins list (if
-    # given) takes ownership of releasing it after materialization
-    if pins is not None and prev_ckpt is not None:
-        pins.append(prev_ckpt)
+    release_frame(sym)
+    # the final checkpoint is read by the returned frame — the caller's
+    # pins list (if given) takes ownership of releasing it after
+    # materialization
+    if pins is not None and labels is not None:
+        pins.append(labels)
     if changed != 0:
         raise RuntimeError(
             f"connected_components_fast did not converge in {max_iter} "
             "doubling rounds (component diameter > ~2^max_iter)"
         )
-    return labels
+    return (
+        nodes.select(qcol(node_id).alias("id"))
+        .join(labels.select("id", "component"), on="id", how="left")
+        .select("id", F.coalesce(F.col("component"), F.col("id")).alias("component"))
+    )
 
 
 def dedup_clusters(
@@ -211,7 +236,9 @@ def dedup_clusters(
     """(id, cluster, is_canonical) — resolve near-dup pairs into
     clusters; the minimum id in each component is the canonical
     survivor (the row a dedup pipeline keeps). Uses the pointer-doubling
-    components (same deterministic labels, O(log n) rounds)."""
+    components (same deterministic labels, O(log n) rounds): the rounds
+    touch only documents that appear in a pair, and every other
+    document joins once at the end as its own singleton cluster."""
     nodes = df.select(qcol(id_col).alias("id"))
     comp = connected_components_fast(nodes, pairs, pins=pins)
     return comp.select(
@@ -835,7 +862,8 @@ def merge_components(
     Scale shape: the batch's endpoints are batch-sized, so the
     affected-component id set is batch-sized (broadcast by AQE into
     both the member semi-join and the untouched anti-join); the
-    pointer-doubling loop runs over affected members + new ids only.
+    pointer-doubling loop runs over the endpoints of the affected
+    components' star edges and the batch's pairs only.
     Shuffles carry (id, component) pairs — never payloads.
 
     Cites /root/reference scope: the reference maintains production
@@ -951,8 +979,10 @@ def _merge_components_core(
         pins=pins,
     )
     # safe NOW: the CC loop materialized eagerly (per-round checkpoints)
-    # and every returned plan reads only old/affected_comps/recomputed —
-    # none of which re-derive from pairs
+    # and ``recomputed`` reads only sub_nodes and its final label
+    # checkpoint, never the edge list — so every returned plan reads
+    # old/affected_comps/new_nodes and checkpoints, none of which
+    # re-derive from pairs
     pairs.unpersist()
     if pins is not None:
         pins.append(affected_comps)

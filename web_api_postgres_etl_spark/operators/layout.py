@@ -537,8 +537,9 @@ def compact_small_files(
     from ..sources.writers import recover_swap, replace_table
 
     recover_swap(path)
+    local = _file_local(path)
     total = 0
-    for root, _dirs, files in os.walk(path):
+    for root, _dirs, files in os.walk(local):
         for f in files:
             if not f.startswith(("_", ".")):
                 total += os.path.getsize(os.path.join(root, f))
@@ -549,7 +550,7 @@ def compact_small_files(
     # actually written, not the target
     replace_table(spark.read.parquet(path).coalesce(n), path)
     written = 0
-    for root, _dirs, files in os.walk(path):
+    for root, _dirs, files in os.walk(local):
         written += sum(
             1 for f in files if not f.startswith(("_", "."))
         )

@@ -490,11 +490,11 @@ def prepare_training_data(
         pins.append(exact)
 
     # 4. near-dup pairs → clusters, computed ONCE and reused for both
-    # the survivor choice and the split key (the leakage guarantee):
-    # pairs are pinned because the component loop would otherwise
-    # re-run the whole LSH pipeline every propagation round, and a
-    # second dedup_clusters inside leakage_safe_split would double it
-    # all again (measured 500 s → 42 s at 50k docs for this plan)
+    # the survivor choice and the split key (the leakage guarantee): a
+    # second dedup_clusters inside leakage_safe_split would re-run the
+    # whole LSH pipeline (measured 500 s → 42 s at 50k docs for this
+    # plan). The pairs are not pinned here: the components loop is their
+    # only consumer, and it checkpoints its edge list in one scan of them
     if cfg.exact_jaccard:
         # completeness-guaranteed pair generation (prefix filtering):
         # same threshold semantics, zero missed pairs — the audit mode
@@ -529,7 +529,6 @@ def prepare_training_data(
             pins=pins,
         ).select("id_a", "id_b")
         pairs = pairs.unionByName(wpairs).distinct()
-    pairs = _pin(pairs)
     if cfg.survivor_score_col is not None:
         # quality-aware survivor: each cluster keeps its best-scored
         # member instead of the arbitrary min id. Cluster LABELS stay

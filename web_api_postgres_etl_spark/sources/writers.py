@@ -150,6 +150,8 @@ def replace_table(
     import os
     import shutil
 
+    from ..plans.fs import _escape_path_name
+
     local = _file_local(path)
     write_overwrite(
         df, path + ".tmp", partition_by=[partition_col] if partition_col else None
@@ -161,7 +163,10 @@ def replace_table(
         shutil.rmtree(old)
         return
     os.makedirs(old, exist_ok=True)
-    for pdir in glob.glob(f"{tmp}/{partition_col}=*"):
+    # the dir names carry the column name as Spark's writer escapes it
+    # (``p:m`` → ``p%3Am=…``), the spelling ``plans.fs.partition_dir`` uses
+    prefix = glob.escape(f"{tmp}/{_escape_path_name(partition_col)}=")
+    for pdir in glob.glob(prefix + "*"):
         name = os.path.basename(pdir)
         dst = os.path.join(local, name)
         if os.path.exists(dst):
