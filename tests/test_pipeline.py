@@ -1216,6 +1216,165 @@ def test_fs_probes_and_empty_partitioned_sink(spark, tmp_path):
     assert wm.probe({"t": empty}) == {"t": None}
 
 
+# ------------------------------------------------- footer watermark probe
+def _scan_wm(spark, path):
+    """The Spark-scan answer: max_watermark(spark.read.parquet(path)),
+    None where the column cannot be resolved."""
+    return WatermarkManager(spark, path)._scan_max(path)
+
+
+def _arrow_sink(path, *tables, **write_kw):
+    """A sink dir of one pyarrow-written part file per table."""
+    import os
+
+    import pyarrow.parquet as pq
+
+    os.makedirs(path, exist_ok=True)
+    for i, t in enumerate(tables):
+        pq.write_table(t, os.path.join(path, f"part-{i:05d}.parquet"), **write_kw)
+    return path
+
+
+def _no_scan(monkeypatch):
+    """Make the Spark-scan fallback fail: a probe must answer from footers."""
+
+    def scan(self, path):
+        raise AssertionError(f"the footers should have answered {path}")
+
+    monkeypatch.setattr(WatermarkManager, "_scan_max", scan)
+
+
+def test_footer_probe_matches_the_spark_scan(spark, tmp_path, monkeypatch):
+    """Where the footers can answer, the probe equals
+    max_watermark(spark.read.parquet(p)) without running the scan,
+    including None for an all-null column and for a nested leaf."""
+    import pyarrow as pa
+
+    monthly = str(tmp_path / "monthly")
+    spark.createDataFrame(
+        [(i, f"1401{i % 4 + 1:02d}", i * 7 % 101) for i in range(200)],
+        "id long, j_month string, `meta.version` long",
+    ).repartition(3).write.partitionBy("j_month").parquet(monthly)
+    groups = _arrow_sink(
+        str(tmp_path / "groups"),
+        pa.table({"id": list(range(100)), "meta.version": [(i * 37) % 1000 for i in range(100)]}),
+        row_group_size=7,
+    )
+    negative = str(tmp_path / "negative")
+    spark.createDataFrame([(1, -9), (2, -3), (3, None)], "id long, `meta.version` long") \
+        .write.parquet(negative)
+    int32 = str(tmp_path / "int32")
+    spark.createDataFrame([(1, 5), (2, 41)], "id long, `meta.version` int").write.parquet(int32)
+    nested = str(tmp_path / "nested")
+    spark.createDataFrame([(1, (8,))], "id long, meta struct<version: long>").write.parquet(nested)
+    nulls = str(tmp_path / "nulls")
+    spark.createDataFrame([(1, None), (2, None)], "id long, `meta.version` long").write.parquet(nulls)
+    one_file = next(str(f) for f in (tmp_path / "int32").glob("part-*.parquet"))
+    cases = {
+        "monthly": monthly, "groups": groups, "negative": negative,
+        "int32": int32, "nested": nested, "nulls": nulls,
+        "uri": "file://" + monthly, "one_file": one_file,
+    }
+    expected = {name: _scan_wm(spark, p) for name, p in cases.items()}
+    assert expected["groups"] == 999 and expected["negative"] == -3
+    assert expected["nested"] is None  # `meta.version` is one flat column, not meta{version}
+    assert expected["nulls"] is None  # an all-null column has no max
+    _no_scan(monkeypatch)
+    assert WatermarkManager(spark, str(tmp_path)).probe(cases) == expected
+
+
+def test_footer_probe_ignores_hidden_files(spark, tmp_path):
+    """Files Spark's file index never reads (a _temporary attempt dir, a
+    dot-file) must not raise the watermark, even holding a larger one."""
+    import os
+    import shutil
+
+    sink = str(tmp_path / "sink")
+    spark.createDataFrame([(1, 7), (2, 9)], "id long, `meta.version` long").write.parquet(sink)
+    part = next(f for f in os.listdir(sink) if f.endswith(".parquet"))
+    big = str(tmp_path / "big")
+    spark.createDataFrame([(3, 10**6)], "id long, `meta.version` long").coalesce(1).write.parquet(big)
+    big_part = os.path.join(big, next(f for f in os.listdir(big) if f.endswith(".parquet")))
+    os.makedirs(os.path.join(sink, "_temporary", "0"))
+    shutil.copy(big_part, os.path.join(sink, "_temporary", "0", part))
+    shutil.copy(big_part, os.path.join(sink, ".x.parquet"))
+    assert WatermarkManager(spark, str(tmp_path)).probe({"t": sink}) == {"t": 9}
+    assert _scan_wm(spark, sink) == 9
+
+
+def test_footer_probe_falls_back_where_footers_cannot_answer(spark, tmp_path, monkeypatch):
+    """No min/max statistics, a version column that is not a plain
+    signed integer, one named in another letter case (Spark resolves
+    names case-insensitively by default), or a sink partitioned by the
+    version column: the probe runs the Spark scan and returns its answer."""
+    import datetime
+
+    import pyarrow as pa
+
+    nostats = _arrow_sink(
+        str(tmp_path / "nostats"),
+        pa.table({"id": [1, 2, 3], "meta.version": [4, 11, 6]}),
+        write_statistics=False,
+    )
+    ts = str(tmp_path / "ts")
+    spark.createDataFrame(
+        [(1, datetime.datetime(2024, 1, 2)), (2, datetime.datetime(2024, 3, 4))],
+        "id long, `meta.version` timestamp",
+    ).write.parquet(ts)
+    upper = str(tmp_path / "upper")
+    spark.createDataFrame([(1, 3)], "id long, `Meta.Version` long").write.parquet(upper)
+    by_version = str(tmp_path / "by_version")
+    spark.createDataFrame([(1, 5), (2, 8)], "id long, `meta.version` long") \
+        .write.partitionBy("meta.version").parquet(by_version)
+    cases = {"nostats": nostats, "ts": ts, "upper": upper, "by_version": by_version}
+    expected = {name: _scan_wm(spark, p) for name, p in cases.items()}
+    assert expected["nostats"] == 11 and expected["by_version"] == 8
+    scanned = []
+    scan = WatermarkManager._scan_max
+    monkeypatch.setattr(
+        WatermarkManager, "_scan_max", lambda self, p: scanned.append(p) or scan(self, p)
+    )
+    assert WatermarkManager(spark, str(tmp_path)).probe(cases) == expected
+    assert scanned == list(cases.values())
+
+
+def test_footer_probe_takes_the_max_over_files_that_carry_the_column(spark, tmp_path, monkeypatch):
+    """A sink whose files disagree on the version column (some written
+    before it existed): the watermark is the max over the files that
+    carry it, whichever footer Spark would infer the schema from."""
+    import pyarrow as pa
+
+    sink = _arrow_sink(
+        str(tmp_path / "mixed"),
+        pa.table({"id": [1, 2]}),
+        pa.table({"id": [3], "meta.version": [5]}),
+        pa.table({"id": [4]}),
+    )
+    _no_scan(monkeypatch)
+    assert WatermarkManager(spark, str(tmp_path)).probe({"t": sink}) == {"t": 5}
+
+
+def test_footer_probe_submits_no_spark_job(spark, tmp_path):
+    """On a local sink the probe reads parquet footers on the driver:
+    no Spark job is submitted (the scan costs listing, schema-inference
+    and aggregate jobs per table)."""
+    sc = spark.sparkContext
+    sink = str(tmp_path / "monthly")
+    spark.createDataFrame(
+        [(i, f"1401{i % 3 + 1:02d}", i) for i in range(30)],
+        "id long, j_month string, `meta.version` long",
+    ).write.partitionBy("j_month").parquet(sink)
+    sc.setJobGroup("footer-probe", "watermark probe")
+    try:
+        out = WatermarkManager(spark, str(tmp_path)).probe({"t": sink})
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert out == {"t": 29}
+    assert list(sc.statusTracker().getJobIdsForGroup("footer-probe")) == []
+
+
 def test_entry_session_key_and_memo_eviction():
     """r14 (ADVICE): the entry-file memo caches key on a stable
     session identifier, not id(spark) — a recycled id must never hand
@@ -1411,9 +1570,9 @@ def _tree_digest(root: str) -> dict[str, str]:
 
 
 def test_corrupt_sink_stops_the_tick_before_any_write(spark, fixtures, tmp_path):
-    """The watermark probes run at once, but one corrupt prd sink still
-    raises out of run_incremental before any chain starts: the healthy
-    sinks stay byte-identical."""
+    """One probe call reads every sink's watermark before any chain
+    starts, so one corrupt prd sink raises out of run_incremental
+    before anything is written: the healthy sinks stay byte-identical."""
     import os
     import shutil
 

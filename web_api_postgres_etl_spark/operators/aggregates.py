@@ -2,15 +2,16 @@
 
 The reference's only aggregate: ``SELECT MAX("meta.version") FROM t``
 looped over every table in a schema (mabna_tables_update.py:86-98),
-feeding the incremental filters. On parquet, ``max`` of a monotone
-column is answered mostly from footer statistics; the probe is cheap
-even at 100 TB (scan of min/max metadata, not data).
+feeding the incremental filters. ``max_watermark`` is that query over
+any DataFrame, answered by a Spark scan; the incremental runner's sink
+probe (``plans.watermark``) answers it from parquet footer statistics
+instead and keeps this scan as its fallback.
 """
 
 from __future__ import annotations
 
 import re
-from collections.abc import Iterable, Mapping, Sequence
+from collections.abc import Iterable, Sequence
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
@@ -22,31 +23,6 @@ def max_watermark(df: DataFrame, column: str = "meta.version"):
     """A1: max value of the watermark column; None for an empty table."""
     row = df.agg(F.max(qcol(column)).alias("wm")).first()
     return row["wm"] if row is not None else None
-
-
-def max_watermarks(
-    tables: Mapping[str, DataFrame], column: str = "meta.version"
-) -> dict[str, int | None]:
-    """The reference's per-schema probe loop (mabna_tables_update.py:86-98):
-    one dict {table → max version}, consumed by every incremental task."""
-    return {name: max_watermark(df, column) for name, df in tables.items()}
-
-
-def max_watermark_union(
-    tables: Mapping[str, DataFrame], column: str = "meta.version"
-) -> dict[str, int | None]:
-    """Single-pass variant: UNION ALL of per-table maxes → one job instead
-    of N sequential jobs (the reference issues N blocking queries)."""
-    parts = [
-        df.agg(F.lit(name).alias("t"), F.max(qcol(column)).alias("wm"))
-        for name, df in tables.items()
-    ]
-    if not parts:
-        return {}
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionAll(p)
-    return {r["t"]: r["wm"] for r in out.collect()}
 
 
 def corpus_stats(

@@ -34,6 +34,13 @@ def path_exists(spark: SparkSession, path: str) -> bool:
     return bool(fs.exists(hpath))
 
 
+def is_local(spark: SparkSession, path: str) -> bool:
+    """True iff ``path`` resolves to the local filesystem: a ``file:``
+    URI, or a bare path while ``fs.defaultFS`` is local."""
+    fs, _ = _hadoop_path(spark, path)
+    return fs.getUri().getScheme() == "file"
+
+
 def has_data_files(spark: SparkSession, path: str) -> bool:
     """True iff ``path`` holds at least one DATA file (recursive,
     skipping ``_*``/``.*`` bookkeeping such as ``_SUCCESS`` and

@@ -484,22 +484,17 @@ class MedallionPipeline:
 
         Mirrors mabna_tables_update.py:383-410 ordering: every append is
         chained with its compaction so re-delivered versions collapse
-        before readers see them. Two concurrent phases: every sink's
-        watermark probe (a probe that raises stops the tick before
-        anything is written), then one chain per fact that has an
-        extractor. Results are recorded after the chains finish, in
-        ``FACTS`` order.
+        before readers see them. One ``WatermarkManager.probe`` call
+        reads every sink's watermark first (from parquet footers, no
+        Spark job on a local warehouse; a probe that raises stops the
+        tick before anything is written), then one chain per fact that
+        has an extractor runs concurrently. Results are recorded after
+        the chains finish, in ``FACTS`` order.
         """
         self.results = []
         facts = [fact for fact in FACTS if fact.name in extractors]
         prd_paths = {f.name: table_path(self.warehouse, "prd", f.name) for f in facts}
-        wm_mgr = WatermarkManager(self.spark, self.warehouse)
-        probes = self._concurrently(
-            [partial(wm_mgr.probe, {name: path}) for name, path in prd_paths.items()]
-        )
-        watermarks: dict[str, int | None] = {}
-        for fut in probes:
-            watermarks.update(fut.result())
+        watermarks = WatermarkManager(self.spark, self.warehouse).probe(prd_paths)
 
         def _tick(fact: Fact) -> None:
             wm = watermarks.get(fact.name)
