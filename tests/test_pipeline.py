@@ -1302,6 +1302,33 @@ def test_footer_probe_ignores_hidden_files(spark, tmp_path):
     assert _scan_wm(spark, sink) == 9
 
 
+def test_scan_probe_reads_a_crashed_first_write_as_missing(spark, tmp_path, monkeypatch):
+    """A sink holding only a crashed first write's ``_temporary/``
+    attempt probes None on the scan path too (every remote sink takes
+    it), as on the footer path: the attempt's part file is not a data
+    file, so Spark's UNABLE_TO_INFER_SCHEMA there means "no table yet",
+    not "corrupt"."""
+    import os
+    import shutil
+
+    from web_api_postgres_etl_spark.plans.watermark import _NeedsScan
+
+    done = str(tmp_path / "done")
+    spark.createDataFrame([(1, 7)], "id long, `meta.version` long").write.parquet(done)
+    sink = str(tmp_path / "sink")
+    os.makedirs(os.path.join(sink, "_temporary", "0", "task_0"))
+    part = next(f for f in os.listdir(done) if f.endswith(".parquet"))
+    shutil.copy(os.path.join(done, part), os.path.join(sink, "_temporary", "0", "task_0", part))
+    wm = WatermarkManager(spark, str(tmp_path))
+    assert wm.probe({"t": sink}) == {"t": None}
+
+    def no_footers(self, path):
+        raise _NeedsScan
+
+    monkeypatch.setattr(WatermarkManager, "_footer_max", no_footers)
+    assert wm.probe({"t": sink}) == {"t": None}
+
+
 def test_footer_probe_falls_back_where_footers_cannot_answer(spark, tmp_path, monkeypatch):
     """No min/max statistics, a version column that is not a plain
     signed integer, one named in another letter case (Spark resolves

@@ -243,7 +243,7 @@ def test_lsh_cosine_expr_form_plan_equal(spark):
     )
     new = lsh_cosine_pairs(
         emb, "vec_id", "embedding", threshold=0.1, num_planes=16,
-        bands=2, signature="axis", cache_signatures=False,
+        bands=2, signature="axis",
     )
     # the pre-batching Column construction, verbatim
     prep = emb.select(

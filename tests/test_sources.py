@@ -48,6 +48,18 @@ def test_json_records_to_df_infers_and_flattens(spark):
     assert df.count() == 2
 
 
+def test_json_records_to_df_leaves_no_landing_file_in_tmpdir(spark, tmp_path, monkeypatch):
+    """The JSON-lines landing file lives with the Spark application, not
+    in $TMPDIR, where nothing would ever remove it."""
+    import tempfile
+
+    monkeypatch.setenv("TMPDIR", str(tmp_path))
+    monkeypatch.setattr(tempfile, "tempdir", None)  # re-read $TMPDIR
+    df = json_records_to_df(spark, [{"id": 1, "meta": {"version": 3}}])
+    assert [r["meta.version"] for r in df.collect()] == [3]
+    assert list(tmp_path.glob("*.jsonl")) == []
+
+
 def test_rest_watermark_pushdown_url():
     """S1: the watermark must reach the URL (server-side predicate —
     constants.yaml:7-9, mabna_tables_update.py:46)."""

@@ -715,6 +715,40 @@ def test_quantile_maintain_streamed_equals_batch(spark, tmp_path):
         )
 
 
+def test_agg_store_refuses_to_adopt_a_spec_over_orphaned_partitions(spark, tmp_path):
+    """A lost spec sidecar over existing partials refuses adoption, as
+    in the quantile and sketch stores: pinning whatever spec the next
+    writer brings would silently mis-merge the old partitions with the
+    new ones. A store with no partitions yet still bootstraps."""
+    import os
+    import shutil
+
+    import pytest as _pt
+
+    from web_api_postgres_etl_spark.streaming.agg_stream import agg_maintain_run
+
+    schema = "k string, v double, u double"
+    src = str(tmp_path / "src")
+    state = str(tmp_path / "state")
+    spark.createDataFrame([("a", 1.0, 2.0)], schema).write.mode("append").parquet(src)
+    agg_maintain_run(
+        spark, src, state, str(tmp_path / "c1"), schema, keys=["k"], sum_cols=["v"]
+    )
+    shutil.rmtree(state + "_meta")
+    with _pt.raises(ValueError, match="refusing to adopt"):
+        agg_maintain_run(
+            spark, src, state, str(tmp_path / "c2"), schema,
+            keys=["k"], sum_cols=["v", "u"],
+        )
+    assert not os.path.exists(state + "_meta")
+
+    fresh = str(tmp_path / "fresh")
+    agg_maintain_run(
+        spark, src, fresh, str(tmp_path / "c3"), schema, keys=["k"], sum_cols=["v", "u"]
+    )
+    assert os.path.exists(fresh + "_meta")
+
+
 def test_quantile_store_sidecar_lifecycle_guards(spark, tmp_path):
     """The two store-corruption doors stay shut: a lost sidecar over
     existing partials refuses adoption (a k-mismatched merge would

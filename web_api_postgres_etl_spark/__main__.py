@@ -185,10 +185,8 @@ def main(argv: list[str] | None = None, spark=None) -> int:
         if args.cmd == "compact":
             # manual T3 repair: last-wins dedup, whole-table (rename
             # swap) or scoped to touched partitions (dynamic overwrite)
-            from web_api_postgres_etl_spark.sources.writers import (
-                _file_local,
-                recover_swap,
-            )
+            from web_api_postgres_etl_spark.plans.fs import file_local
+            from web_api_postgres_etl_spark.sources.writers import recover_swap
 
             keys = [k.strip() for k in args.keys.split(",") if k.strip()]
             if not keys:
@@ -206,7 +204,7 @@ def main(argv: list[str] | None = None, spark=None) -> int:
             recover_swap(args.table)
             pipe = MedallionPipeline(spark, warehouse="")
             before = spark.read.parquet(args.table).count()
-            part_dirs = glob.glob(os.path.join(_file_local(args.table), "*=*"))
+            part_dirs = glob.glob(os.path.join(file_local(args.table), "*=*"))
             if part_dirs and not args.partition_col:
                 raise SystemExit(
                     "compact: table is hive-partitioned "

@@ -458,7 +458,6 @@ def minhash_lsh_candidates(
     shingle_n: int = 3,
     num_hashes: int = 16,
     bands: int = 4,
-    cache_signatures: bool = False,
 ) -> DataFrame:
     """MinHash+LSH near-duplicate candidate pairs.
 
@@ -470,17 +469,13 @@ def minhash_lsh_candidates(
     ``ngram_jaccard_pairs`` restricted to this output (at 100 TB, via a
     semi-join on the candidate pairs).
 
-    ``cache_signatures`` (default False since r15, previously True):
-    UNPERSISTED, the two join sides' identical signature subtree is
-    computed once by AQE stage reuse, the probe side keeps its id
-    partitioning so the pair distinct collapses into the join stage
-    (no third exchange), and there is no cache-build barrier — see
-    ``_band_self_join``. Pass True only when composing the returned
-    signatures somewhere AQE cannot see the shared subtree.
+    The signatures stay unpersisted: the two join sides' identical
+    signature subtree is computed once by AQE stage reuse, the probe
+    side keeps its id partitioning so the pair distinct collapses into
+    the join stage (no third exchange), and there is no cache-build
+    barrier — see ``_band_self_join``.
     """
     mh = minhash_table(df, id_col, text_col, shingle_n, num_hashes)
-    if cache_signatures:
-        mh = mh.persist()
     # shingle-less docs (NULL signature) can never be near-dups — drop
     # before banding (concat_ws would otherwise give them equal keys,
     # diverging from SQL's NULL-propagating ||)

@@ -264,8 +264,7 @@ def maintain_history(
     rewrites only the keys the batch touches, and untouched keys stream
     through the anti-join side unchanged.
     """
-    from pyspark.errors import AnalysisException
-
+    from ..plans.fs import read_if_present
     from ..sources.writers import recover_swap, replace_table, write_overwrite
 
     # repair a crashed prior swap FIRST: in its crash window the live
@@ -273,20 +272,10 @@ def maintain_history(
     # recovery would misread that state as the bootstrap case and
     # rebuild from the new batch alone, silently dropping all history
     recover_swap(history_path)
-    try:
-        existing = spark.read.parquet(history_path)
-        bootstrap = False
-    except AnalysisException as exc:
-        msg = str(exc)
-        if not (
-            "PATH_NOT_FOUND" in msg
-            or "Path does not exist" in msg
-            or "UNABLE_TO_INFER_SCHEMA" in msg
-            or "Unable to infer schema" in msg
-        ):
-            raise
-        bootstrap = True
-    if bootstrap:
+    # bootstrap only where no history is there yet (plans.fs rule 2);
+    # an unreadable one raises rather than being rebuilt from the batch
+    existing = read_if_present(spark, history_path)
+    if existing is None:
         hist = scd2_history(changes, keys, ts_col, attr_cols, seq_col=seq_col)
         write_overwrite(hist, history_path)
     else:

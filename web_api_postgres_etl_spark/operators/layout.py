@@ -35,7 +35,7 @@ from typing import Sequence
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..sources.writers import _file_local
+from ..plans.fs import file_local, local_data_files
 from .project import qcol
 
 
@@ -194,22 +194,7 @@ def _rel_id(uri_or_path: str, base_local: str) -> str:
     number + job uuid), so basenames collide across partitions. Not
     the full URI either — ``file:///`` vs ``hdfs://`` prefixes across
     environments is how manifests go stale."""
-    p = uri_or_path
-    if "://" in p or p.startswith("file:"):
-        from urllib.parse import unquote, urlparse
-
-        parsed = urlparse(p)
-        p = unquote(parsed.path) if parsed.scheme in ("file", "") else parsed.path
-    return os.path.relpath(p, base_local)
-
-
-def _local_base(path: str) -> str:
-    if "://" in path or path.startswith("file:"):
-        from urllib.parse import unquote, urlparse
-
-        parsed = urlparse(path)
-        return unquote(parsed.path) if parsed.scheme in ("file", "") else parsed.path
-    return path
+    return os.path.relpath(file_local(uri_or_path), base_local)
 
 
 def zone_map_update(
@@ -226,22 +211,13 @@ def zone_map_update(
     (same name, new content) violate parquet immutability and don't
     occur under Spark's writers. Listing is driver-side filesystem
     metadata — the same seam ``compact_small_files`` uses."""
-    base = _local_base(path)
+    base = file_local(path)
     known = {
         _rel_id(r["file"], base) for r in existing.select("file").collect()
     }
-    new_files = []
-    seen = 0
-    for root, dirs, files in os.walk(base):
-        # prune hidden dirs: never treat a _sidecar/.staging file as data
-        dirs[:] = [d for d in dirs if not d.startswith(("_", "."))]
-        for f in files:
-            if not f.startswith(("_", ".")):
-                seen += 1
-                full = os.path.join(root, f)
-                if _rel_id(full, base) not in known:
-                    new_files.append(full)
-    if seen == 0 and known:
+    files = list(local_data_files(base))
+    new_files = [f for f in files if _rel_id(f, base) not in known]
+    if not files and known:
         # a local-listing miss (remote URI, moved table) must fail
         # LOUDLY: silently returning the stale map would make pruned
         # reads drop every file the map has never heard of
@@ -265,7 +241,6 @@ def _move_parquet_in(frame, tmp: str, base_local: str, pcols: list) -> list:
     (new files land BEFORE any old file is removed; Spark part names
     embed a job UUID so collisions cannot occur). Returns the moved
     files as file:// URIs (the zone-map identity)."""
-    import os
     import shutil
     from pathlib import Path
 
@@ -274,19 +249,12 @@ def _move_parquet_in(frame, tmp: str, base_local: str, pcols: list) -> list:
         writer = writer.partitionBy(*pcols)
     writer.parquet(tmp)
     moved = []
-    tmp_local = _file_local(tmp)
-    for dirpath, _dirnames, filenames in os.walk(tmp_local):
-        for name in filenames:
-            if not name.endswith(".parquet"):
-                continue
-            rel = os.path.relpath(dirpath, tmp_local)
-            dst_dir = (
-                base_local if rel == "." else os.path.join(base_local, rel)
-            )
-            os.makedirs(dst_dir, exist_ok=True)
-            dst = os.path.join(dst_dir, name)
-            shutil.move(os.path.join(dirpath, name), dst)
-            moved.append(Path(dst).as_uri())
+    tmp_local = file_local(tmp)
+    for src in list(local_data_files(tmp_local)):
+        dst = os.path.join(base_local, os.path.relpath(src, tmp_local))
+        os.makedirs(os.path.dirname(dst), exist_ok=True)
+        shutil.move(src, dst)
+        moved.append(Path(dst).as_uri())
     shutil.rmtree(tmp_local, ignore_errors=True)
     return moved
 
@@ -311,18 +279,11 @@ def row_digest(cols: Sequence[str]) -> Column:
 
 def table_has_parquet(path: str) -> bool:
     """True iff the (local-filesystem) table directory already holds at
-    least one parquet part file — the maintenance faces' bootstrap
-    test. A directory that exists but holds no parquet (a crashed
-    first write that never moved files in) correctly reads as 'no
-    table yet'."""
-    local = _file_local(path)
-    if not os.path.isdir(local):
-        return False
-    return any(
-        name.endswith(".parquet")
-        for _dir, _dn, files in os.walk(local)
-        for name in files
-    )
+    least one data file (``plans.fs`` rule 1) — the maintenance faces'
+    bootstrap test. A directory that exists but holds no data file (a
+    crashed first write that never moved files in) correctly reads as
+    'no table yet'."""
+    return next(local_data_files(file_local(path)), None) is not None
 
 
 def land_bootstrap(frame: DataFrame, path: str) -> list[str]:
@@ -333,7 +294,7 @@ def land_bootstrap(frame: DataFrame, path: str) -> list[str]:
     with no parquet files that would wedge every replay onto the
     conditional path. Shared by the CDC and cluster maintenance
     streaming faces. Returns the moved files as ``file://`` URIs."""
-    local = _file_local(path)
+    local = file_local(path)
     os.makedirs(local, exist_ok=True)
     return _move_parquet_in(
         frame, path.rstrip("/") + ".bootstrap_tmp", local, []
@@ -416,7 +377,7 @@ def zone_map_refresh(
         return fresh
     if cols is None:
         cols = zone_map_cols(existing)
-    base = _local_base(path)
+    base = file_local(path)
     # identity = table-relative path (basenames COLLIDE across
     # partition dirs of one write job — see _rel_id); the map's own
     # URIs key the removal filter so it matches exactly what
@@ -424,14 +385,7 @@ def zone_map_refresh(
     known: dict[str, str] = {}
     for r in existing.select("file").collect():
         known[_rel_id(r["file"], base)] = r["file"]
-    current: dict[str, str] = {}
-    for root, dirs, files in os.walk(base):
-        # prune hidden dirs: never treat a _sidecar/.staging file as data
-        dirs[:] = [d for d in dirs if not d.startswith(("_", "."))]
-        for f in files:
-            if not f.startswith(("_", ".")):
-                full = os.path.join(root, f)
-                current[_rel_id(full, base)] = full
+    current = {_rel_id(f, base): f for f in local_data_files(base)}
     if not current and known:
         raise ValueError(
             f"listing {path!r} found no data files but the existing "
@@ -537,24 +491,15 @@ def compact_small_files(
     from ..sources.writers import recover_swap, replace_table
 
     recover_swap(path)
-    local = _file_local(path)
-    total = 0
-    for root, _dirs, files in os.walk(local):
-        for f in files:
-            if not f.startswith(("_", ".")):
-                total += os.path.getsize(os.path.join(root, f))
+    local = file_local(path)
+    total = sum(os.path.getsize(f) for f in local_data_files(local))
     n = max(min_files, int(total / target_file_bytes) + (1 if total % target_file_bytes else 0))
     # coalesce cannot RAISE the partition count — when the reader
     # already packs the small files into fewer partitions than n, fewer
     # files come out, which is why the return value counts what was
     # actually written, not the target
     replace_table(spark.read.parquet(path).coalesce(n), path)
-    written = 0
-    for root, _dirs, files in os.walk(local):
-        written += sum(
-            1 for f in files if not f.startswith(("_", "."))
-        )
-    return written
+    return sum(1 for _ in local_data_files(local))
 
 
 # ------------------------------------------------------ surgical delete
@@ -600,7 +545,7 @@ def purge_rows(
     """
     import os
 
-    base_local = _file_local(path)
+    base_local = file_local(path)
 
     full = spark.read.parquet(path)
     if id_col not in full.columns:
@@ -631,7 +576,7 @@ def purge_rows(
     # file's path relative to the table root (all files of one table
     # share the layout — Spark enforces it at write time)
     rel_dirs = os.path.relpath(
-        _file_local(affected[0]), base_local
+        file_local(affected[0]), base_local
     ).split(os.sep)[:-1]
     # partition-aware rewrite: moved files must land back inside their
     # own col=value/ directories (root-level leaf files silently
@@ -644,7 +589,7 @@ def purge_rows(
         kept, path.rstrip("/") + ".purge_tmp", base_local, pcols
     )
     for uri in affected:
-        os.remove(_file_local(uri))
+        os.remove(file_local(uri))
     return {
         "rows_purged": rows_purged,
         "files_rewritten": len(affected),
@@ -692,7 +637,7 @@ def upsert_rows(
     affected files are re-read once for the anti-join rewrite."""
     import os
 
-    base_local = _file_local(path)
+    base_local = file_local(path)
     full = spark.read.parquet(path)
     if id_col not in full.columns:
         raise ValueError(
@@ -769,20 +714,17 @@ def upsert_rows(
     rows_replaced = sum(r["n"] for r in per_file)
 
     rel_dirs = (
-        os.path.relpath(_file_local(affected[0]), base_local).split(os.sep)[:-1]
+        os.path.relpath(file_local(affected[0]), base_local).split(os.sep)[:-1]
         if affected else []
     )
     pcols = [seg.split("=", 1)[0] for seg in rel_dirs if "=" in seg]
     if not affected:
         # partition layout still matters for pure inserts — discover it
-        # from ANY existing leaf file (all files share the layout)
-        for dirpath, _dn, filenames in os.walk(base_local):
-            leaf = next((f for f in filenames if f.endswith(".parquet")), None)
-            if leaf:
-                rel = os.path.relpath(dirpath, base_local)
-                segs = [] if rel == "." else rel.split(os.sep)
-                pcols = [s.split("=", 1)[0] for s in segs if "=" in s]
-                break
+        # from ANY existing data file (all files share the layout)
+        leaf = next(local_data_files(base_local), None)
+        if leaf:
+            segs = os.path.relpath(leaf, base_local).split(os.sep)[:-1]
+            pcols = [s.split("=", 1)[0] for s in segs if "=" in s]
 
     # 2. new versions move in FIRST (duplicate-on-crash, never lose)
     added = _move_parquet_in(
@@ -797,7 +739,7 @@ def upsert_rows(
             kept, path.rstrip("/") + ".upsert_old_tmp", base_local, pcols
         )
         for uri in affected:
-            os.remove(_file_local(uri))
+            os.remove(file_local(uri))
     return {
         "rows_replaced": rows_replaced,
         "rows_inserted": n_updates - n_matched_ids,

@@ -754,7 +754,6 @@ def lsh_cosine_pairs(
     bands: int = 2,
     signature: str = "axis",
     dims: int | None = None,
-    cache_signatures: bool = False,
 ) -> DataFrame:
     """LSH-bucketed cosine near-dup pairs — the 100 TB form of
     ``cosine_pairs``: only vectors sharing ≥1 signature band are scored
@@ -765,10 +764,9 @@ def lsh_cosine_pairs(
     With signature='axis' the banding itself is oracle-expressible, so
     the approximate pair set verifies exactly against a SQL engine.
 
-    ``cache_signatures`` (default False since r15, previously True):
-    unpersisted, AQE stage reuse computes the join sides' shared
-    signature subtree once and no cache-build barrier is paid —
-    measured faster than both the persisted form and a fused
+    The signatures stay unpersisted: AQE stage reuse computes the join
+    sides' shared signature subtree once and no cache-build barrier is
+    paid — measured faster than both the persisted form and a fused
     bucket-aggregate alternative (see ``_band_self_join``).
     """
     prep = corpus.select(
@@ -780,8 +778,6 @@ def lsh_cosine_pairs(
         corpus.sparkSession, "__v", signature, num_planes, dims
     )
     sigd = prep.select("__id", sig_of("__v").alias("__sig"))
-    if cache_signatures:
-        sigd = sigd.persist()
     banded = sigd.select(
         "__id",
         F.explode_outer(
@@ -1686,18 +1682,12 @@ def _read_index_meta(spark, path: str) -> dict:
     pre-r12 index is a plain, non-residual one). Only a MISSING sidecar
     downgrades to {}: any other read failure (permissions, corrupt
     footer) propagates, because silently treating a residual index as
-    plain would return wrong distances, not an error (r13)."""
-    from pyspark.errors import AnalysisException
+    plain would return wrong distances, not an error (r13). "Missing"
+    is ``plans.fs``'s rule 2."""
+    from ..plans.fs import read_if_present
 
-    try:
-        return {
-            r["key"]: r["value"]
-            for r in spark.read.parquet(path + "_meta").collect()
-        }
-    except AnalysisException as exc:
-        if "PATH_NOT_FOUND" in str(exc):
-            return {}
-        raise
+    meta = read_if_present(spark, path + "_meta")
+    return {} if meta is None else {r["key"]: r["value"] for r in meta.collect()}
 
 
 def _index_is_residual(spark, path: str) -> bool:
@@ -2118,9 +2108,10 @@ def ivf_pq_index_compact(
     """
     import os
 
-    from .layout import _file_local, compact_small_files
+    from ..plans.fs import file_local, local_data_files
+    from .layout import compact_small_files
 
-    root = _file_local(path)
+    root = file_local(path)
     parts = sorted(
         d for d in os.listdir(root)
         if d.startswith("cluster=") and os.path.isdir(os.path.join(root, d))
@@ -2131,11 +2122,7 @@ def ivf_pq_index_compact(
         )
 
     def _n_files(d: str) -> int:
-        return sum(
-            1 for f in os.listdir(d)
-            if not f.startswith(("_", "."))
-            and os.path.isfile(os.path.join(d, f))
-        )
+        return sum(1 for _ in local_data_files(d))
 
     before = {p: _n_files(os.path.join(root, p)) for p in parts}
     compacted = 0

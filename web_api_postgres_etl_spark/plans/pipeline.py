@@ -391,10 +391,7 @@ class MedallionPipeline:
             # a fact this run did not ingest republishes from the stg an
             # earlier run left, unless ticks have appended to its prd
             # since (_holds_tick_rows); it is skipped when there is no
-            # stg — checked explicitly (the watermark.probe pattern;
-            # Spark 4.1's resolver reports a missing path as
-            # UNABLE_TO_INFER_SCHEMA or PATH_NOT_FOUND depending on
-            # context, so exception classification is unreliable).
+            # stg — checked explicitly, before any write.
             # Scheme-aware probe (plans.fs): a local os.path.exists would
             # read every stg path on an HDFS/S3 warehouse as absent and
             # skip ALL prds behind a green run.

@@ -25,58 +25,33 @@ from urllib.parse import unquote
 from pyspark.sql import SparkSession
 
 from ..operators.aggregates import max_watermark
-from ..sources.writers import _file_local
-from .fs import has_data_files, is_local, path_exists
-
-
-def _error_condition(exc) -> str | None:
-    """Top-level error condition of a PySpark exception (e.g.
-    ``UNRESOLVED_COLUMN.WITH_SUGGESTION`` → ``UNRESOLVED_COLUMN``), or
-    None when the exception carries no condition. Message-substring
-    classification is version-dependent (and a condition name quoted
-    inside an unrelated message would misclassify); the condition field
-    is the stable contract."""
-    for getter in ("getCondition", "getErrorClass"):
-        fn = getattr(exc, getter, None)
-        if fn is None:
-            continue
-        try:
-            cond = fn()
-        except Exception:
-            continue
-        if cond:
-            return str(cond).split(".", 1)[0]
-    return None
+from .fs import (
+    error_condition,
+    file_local,
+    is_local,
+    local_data_files,
+    read_if_present,
+)
 
 
 class _NeedsScan(Exception):
     """The footers cannot answer this probe; the Spark scan must."""
 
 
-def _hidden(name: str) -> bool:
-    """A file or directory name Spark's file index never reads
-    (InMemoryFileIndex.shouldFilterOutPathName): ``_temporary``,
-    ``_SUCCESS``, ``.crc`` checksums, in-flight ``._COPYING_`` uploads."""
-    return (
-        (name.startswith("_") and "=" not in name)
-        or name.startswith(".")
-        or name.endswith("._COPYING_")
-    )
-
-
 def _data_files(root: str, column: str) -> list[str]:
     """The parquet data files a Spark read of ``root`` would scan. A
     partition directory keyed by ``column`` means the value lives in
     directory names, not footers."""
-    if os.path.isfile(root):
-        return [root]
-    out = []
-    for d, dirs, files in os.walk(root):
-        dirs[:] = [x for x in dirs if not _hidden(x)]
-        if any(unquote(x.split("=", 1)[0]).lower() == column.lower() for x in dirs if "=" in x):
-            raise _NeedsScan
-        out += [os.path.join(d, f) for f in files if not _hidden(f)]
-    return out
+    files = list(local_data_files(root))
+    keys = {
+        unquote(seg.split("=", 1)[0]).lower()
+        for d in {os.path.dirname(f) for f in files}
+        for seg in os.path.relpath(d, root).split(os.sep)
+        if "=" in seg
+    }
+    if column.lower() in keys:
+        raise _NeedsScan
+    return files
 
 
 def _signed_int(col) -> bool:
@@ -165,11 +140,8 @@ class WatermarkManager:
         raises ``_NeedsScan`` where they cannot answer."""
         if not is_local(self.spark, path):
             raise _NeedsScan
-        local = _file_local(path)
-        if not os.path.exists(local):
-            return None
         maxes = [
-            v for f in _data_files(local, self.version_col)
+            v for f in _data_files(file_local(path), self.version_col)
             if (v := _file_footer_max(f, self.version_col)) is not None
         ]
         return max(maxes, default=None)
@@ -179,25 +151,16 @@ class WatermarkManager:
         None-versus-raise rules as ``probe``."""
         from pyspark.errors import AnalysisException
 
-        # scheme-aware (plans.fs): on an HDFS/S3 warehouse a local
-        # os.path.exists would read EVERY sink as absent and probe
-        # None across the board — a silent full re-ingest
-        if not path_exists(self.spark, path):
+        # a sink with no table yet (plans.fs rule 2: no path, or no
+        # data files) probes None; one whose data files cannot be read
+        # raises — a corrupt sink must be a decision, not a swallowed
+        # full re-ingest
+        sink = read_if_present(self.spark, path)
+        if sink is None:
             return None
         try:
-            return max_watermark(self.spark.read.parquet(path), self.version_col)
+            return max_watermark(sink, self.version_col)
         except AnalysisException as exc:
-            cond = _error_condition(exc)
-            if cond in ("PATH_NOT_FOUND", "UNRESOLVED_COLUMN", "FIELD_NOT_FOUND"):
-                # vanished between probe and read / pre-versioned
-                # bootstrap (no version column yet) → not-yet
-                return None
-            if cond == "UNABLE_TO_INFER_SCHEMA" and not has_data_files(self.spark, path):
-                # a zero-row partitioned write leaves only _SUCCESS
-                # — a legitimately empty sink, not a corrupt one
-                return None
-            # UNABLE_TO_INFER_SCHEMA over PRESENT data files
-            # (unreadable-as-parquet), or any other condition: a
-            # corrupt sink must be a decision, not a swallowed full
-            # re-ingest
+            if error_condition(exc) in ("UNRESOLVED_COLUMN", "FIELD_NOT_FOUND"):
+                return None  # pre-versioned bootstrap: no version column yet
             raise

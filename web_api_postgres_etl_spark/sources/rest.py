@@ -20,10 +20,10 @@ payloads.
 from __future__ import annotations
 
 import json
-import os
 import tempfile
 from collections.abc import Iterable, Mapping
 
+from pyspark import SparkFiles
 from pyspark.sql import DataFrame, SparkSession
 
 from .json_flatten import flatten
@@ -86,14 +86,18 @@ def json_records_to_df(
 ) -> DataFrame:
     """JSON records → (flattened) DataFrame.
 
-    Lands records as JSON-lines in a temp file and uses
-    ``spark.read.json`` so Spark owns schema inference (PERMISSIVE mode
-    tolerates field additions — the reference's SELECT* tolerance,
-    SURVEY.md §7.4.7). For big payloads this avoids driver-side
-    ``createDataFrame`` materialization.
+    Lands records as JSON-lines in a file and uses ``spark.read.json``
+    so Spark owns schema inference (PERMISSIVE mode tolerates field
+    additions — the reference's SELECT* tolerance, SURVEY.md §7.4.7).
+    For big payloads this avoids driver-side ``createDataFrame``
+    materialization. The file must outlive the lazy frame, so it lands
+    in the driver's ``SparkFiles`` root directory, which
+    ``SparkContext.stop()`` deletes: no landing file outlives the
+    application that reads it.
     """
     tmp = tempfile.NamedTemporaryFile(
-        "w", suffix=".jsonl", delete=False, dir=os.environ.get("TMPDIR", "/tmp")
+        "w", prefix="rest-", suffix=".jsonl", delete=False,
+        dir=SparkFiles.getRootDirectory(),
     )
     with tmp as fh:
         for rec in records:

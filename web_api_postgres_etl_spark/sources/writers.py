@@ -73,32 +73,6 @@ def read_table(spark: SparkSession, path: str, fmt: str = "parquet") -> DataFram
     return r.load(path)
 
 
-def _file_local(uri: str) -> str:
-    """file:// URI (or bare path) → local filesystem path — the ONE
-    definition every rewrite op shares (the swap below, purge/upsert/
-    CDC apply); zone-map identities stay URIs, only filesystem
-    operations unwrap them. Non-local schemes RAISE: the rewrite ops
-    move directories and part files with os/shutil, and an
-    s3a://-style path passed through unchanged would make every
-    listing come back empty — a compaction would then report success
-    without swapping anything in, or an upsert would strand its rows
-    in the .tmp dir (silent data non-landing). These ops are
-    local-filesystem scoped by design; a distributed deployment fronts
-    them with a table format's commit protocol instead."""
-    from urllib.parse import unquote, urlparse
-
-    parsed = urlparse(uri)
-    if parsed.scheme not in ("file", ""):
-        raise ValueError(
-            f"table rewrite ops are local-filesystem scoped: got "
-            f"{uri!r} (scheme {parsed.scheme!r}) — compaction/purge/"
-            "upsert/apply_changes move files with os/shutil and cannot "
-            "operate on remote URIs; use a table format (Delta/"
-            "Iceberg) for remote rewrites"
-        )
-    return unquote(parsed.path) if parsed.scheme == "file" else uri
-
-
 def recover_swap(path: str) -> None:
     """Repair a crashed ``replace_table`` swap before starting a new one.
 
@@ -115,7 +89,9 @@ def recover_swap(path: str) -> None:
     import os
     import shutil
 
-    path = _file_local(path)
+    from ..plans.fs import file_local
+
+    path = file_local(path)
     old, tmp = path + ".old", path + ".tmp"
     if os.path.exists(old) and not os.path.exists(path):
         shutil.move(old, path)
@@ -150,9 +126,9 @@ def replace_table(
     import os
     import shutil
 
-    from ..plans.fs import _escape_path_name
+    from ..plans.fs import _escape_path_name, file_local
 
-    local = _file_local(path)
+    local = file_local(path)
     write_overwrite(
         df, path + ".tmp", partition_by=[partition_col] if partition_col else None
     )

@@ -34,8 +34,8 @@ over 15-minute batches, the reference's own loop granularity).
 
 from __future__ import annotations
 
+from .ckpt import check_or_write_sidecar
 from .ckpt import ckpt_tag as _ckpt_tag
-from .ckpt import is_missing_path_error as _is_missing
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -45,6 +45,7 @@ from ..operators.aggregates import (
     incremental_agg_state,
     merge_agg_states,
 )
+from ..plans.fs import read_if_present
 
 _PART_COL = "agg_batch_id"
 
@@ -59,46 +60,14 @@ def _spec_row(keys, sum_cols, min_cols, max_cols, distinct_cols) -> tuple:
     )
 
 
-def _check_or_write_spec(spark: SparkSession, state_dir: str, row: tuple) -> None:
-    """The store's family sidecar (same design as the minhash index):
-    partitions written under DIFFERENT specs would silently mis-merge
-    on read (parquet schema inference picks one arbitrary footer;
-    missing state columns surface as skipped NULLs — undercounting,
-    not an error), so the FIRST writer records the spec and every
-    later writer must match it exactly."""
-    from pyspark.errors import AnalysisException
-
-    schema = (
-        "keys string, sum_cols string, min_cols string, max_cols string, "
-        "distinct_cols string"
-    )
-    meta_path = state_dir + "_meta"
-    try:
-        rows = spark.read.parquet(meta_path).collect()
-    except AnalysisException as exc:
-        if not _is_missing(exc):
-            raise
-        spark.createDataFrame([row], schema).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(meta_path)
-        return
-    if len(rows) != 1:
-        raise ValueError(
-            f"agg state at {state_dir}: expected exactly 1 _meta row, "
-            f"found {len(rows)}"
-        )
-    stored = tuple(rows[0])
-    # sidecars written before a spec field existed are padded with the
-    # field's empty default — widening the schema must never brick an
-    # existing store whose effective spec is unchanged
-    if len(stored) < len(row):
-        stored = stored + ("",) * (len(row) - len(stored))
-    if stored != row:
-        raise ValueError(
-            f"agg state at {state_dir} was built with spec {stored}; "
-            f"refusing to write partitions with mismatched spec {row} "
-            "(they would silently mis-merge on read)"
-        )
+# the store's spec sidecar (streaming/ckpt.py::check_or_write_sidecar):
+# partitions written under DIFFERENT specs would silently mis-merge on
+# read (parquet schema inference picks one arbitrary footer; missing
+# state columns surface as skipped NULLs — undercounting, not an error)
+_SPEC_SCHEMA = (
+    "keys string, sum_cols string, min_cols string, max_cols string, "
+    "distinct_cols string"
+)
 
 
 def agg_maintain_run(
@@ -133,9 +102,9 @@ def agg_maintain_run(
     # shared normalize-then-hash recipe (see streaming/ckpt.py for the
     # normalization rationale and the r8 migration note)
     ckpt_tag = _ckpt_tag(checkpoint_dir)
-    _check_or_write_spec(
-        spark, state_dir,
-        _spec_row(keys, sum_cols, min_cols, max_cols, distinct_cols),
+    check_or_write_sidecar(
+        spark, state_dir, _SPEC_SCHEMA,
+        _spec_row(keys, sum_cols, min_cols, max_cols, distinct_cols), "agg",
     )
 
     def _process(batch_df, batch_id: int) -> None:
@@ -206,12 +175,10 @@ def compact_agg_state(
         .parquet(compacted_dir)
     )
     # carry the spec sidecar: maintainers layering on the compacted
-    # store must validate against the ORIGINAL spec, not re-bootstrap
-    from pyspark.errors import AnalysisException
-
-    try:
-        meta = spark.read.parquet(state_dir + "_meta")
+    # store must validate against the ORIGINAL spec, not re-bootstrap;
+    # a pre-sidecar store has none (the next maintainer bootstraps
+    # one), and an unreadable one raises
+    meta = read_if_present(spark, state_dir + "_meta")
+    if meta is not None:
         meta.coalesce(1).write.mode("overwrite").parquet(compacted_dir + "_meta")
-    except AnalysisException:
-        pass  # pre-sidecar store: the next maintainer bootstraps one
     return spark.read.parquet(compacted_dir).count()

@@ -1,4 +1,5 @@
-"""Checkpoint-scoped partition tags — the ONE definition.
+"""What the streaming partial-state stores share: the checkpoint-scoped
+partition tag and the spec sidecar guard — one definition of each.
 
 The streaming stores (agg_stream, sketch_stream, curation_stream)
 write each micro-batch to its own partition keyed
@@ -25,11 +26,22 @@ deleting and reusing the SAME path restarts batch_id at 0 under the
 same tag — the replayed first batch overwrites {tag}-0 while stale
 {tag}-1..n remain and the merged state silently over-counts. Pair any
 checkpoint reset with a fresh checkpoint dir.
+
+The partial-state stores (agg_stream, quantile_stream, sketch_stream)
+pin the spec their partitions were built with in a ``<state>_meta``
+sidecar (``check_or_write_sidecar``): partitions built under another
+spec would silently mis-merge on read. Whether a sidecar or a store is
+there yet is decided by ``plans.fs`` (its data-file and missing-table
+rules), as for every other table.
 """
 
 from __future__ import annotations
 
 import hashlib
+
+from pyspark.sql import SparkSession
+
+from ..plans.fs import has_data_files, read_if_present
 
 
 def ckpt_tag(checkpoint_dir: str) -> str:
@@ -38,37 +50,44 @@ def ckpt_tag(checkpoint_dir: str) -> str:
     return hashlib.md5(checkpoint_dir.rstrip("/").encode()).hexdigest()[:8]
 
 
-def is_missing_path_error(exc) -> bool:
-    """True when an AnalysisException means "nothing readable at this
-    path" — the bootstrap face every partial-state store must
-    distinguish from a real failure (permissions, corrupt footers).
-    THE one matcher: Spark 4 spells it PATH_NOT_FOUND /
-    UNABLE_TO_INFER_SCHEMA, older releases spell the message out; a
-    zero-row write leaves only _SUCCESS, which reads as the
-    schema-inference face. Four modules used to carry private copies
-    of this block — exactly the drift that caused round 7's replay
-    double-count (one copy normalized, the others didn't)."""
-    msg = str(exc)
-    return (
-        "PATH_NOT_FOUND" in msg
-        or "Path does not exist" in msg
-        or "UNABLE_TO_INFER_SCHEMA" in msg
-        or "Unable to infer schema" in msg
-    )
-
-
-def state_has_files(state_dir: str) -> bool:
-    """True when a state directory holds any non-hidden data file —
-    the "are there existing partitions a missing sidecar would orphan"
-    probe (a store with data but no readable sidecar must REFUSE to
-    adopt whatever family the next writer brings)."""
-    import os
-
-    if not os.path.isdir(state_dir):
-        return False
-    for root, dirs, files in os.walk(state_dir):
-        dirs[:] = [d for d in dirs if not d.startswith(("_", "."))]
-        for f in files:
-            if not f.startswith(("_", ".")):
-                return True
-    return False
+def check_or_write_sidecar(
+    spark: SparkSession, state_dir: str, schema: str, row: tuple, store: str
+) -> None:
+    """Pin ``row`` (the store's spec, in ``schema``) in the sidecar
+    ``state_dir + "_meta"``, or check it against the pinned one. The
+    FIRST writer records the spec and every later writer must match it
+    exactly. A missing sidecar over EXISTING partitions refuses to
+    adopt whatever spec the next writer brings: partials built under
+    another spec would silently mis-merge with the new ones. A sidecar
+    written before a spec field existed reads with that field's empty
+    default, so widening a spec never bricks a store. ``store`` names
+    the store in errors."""
+    meta_path = state_dir + "_meta"
+    meta = read_if_present(spark, meta_path)
+    if meta is None:
+        if has_data_files(spark, state_dir):
+            raise ValueError(
+                f"{store} state at {state_dir} has partitions but no "
+                "readable spec sidecar — refusing to adopt a spec over "
+                "existing partitions (rewrite the _meta sidecar with the "
+                "spec they were built with)"
+            )
+        spark.createDataFrame([row], schema).coalesce(1).write.mode(
+            "overwrite"
+        ).parquet(meta_path)
+        return
+    rows = meta.collect()
+    if len(rows) != 1:
+        raise ValueError(
+            f"{store} state at {state_dir}: expected exactly 1 _meta row, "
+            f"found {len(rows)}"
+        )
+    stored = tuple(rows[0])
+    stored += ("",) * (len(row) - len(stored))
+    if stored != row:
+        raise ValueError(
+            f"{store} state at {state_dir} was built with spec {stored}; "
+            f"refusing to write partitions with mismatched spec {row} — "
+            "partitions of another spec family would silently mis-merge "
+            "on read"
+        )

@@ -38,7 +38,6 @@ from pyspark.sql import functions as F
 from ..caching import release_frame
 from ..operators.graph import connected_components_fast, merge_components_delta
 from ..operators.layout import (
-    _file_local,
     land_bootstrap,
     table_has_parquet,
     upsert_rows,
@@ -70,8 +69,7 @@ def apply_pairs(
         .union(clean.select(F.col("id_b").alias("id")))
         .distinct()
     )
-    # scope check up front (also validates the path before bootstrap)
-    _file_local(labels_path)
+    # table_has_parquet raises on a non-local path, before any bootstrap
     if not table_has_parquet(labels_path):
         pins: list[DataFrame] = []
         boot = connected_components_fast(

@@ -24,6 +24,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.text import content_hash, quality_score, redact_pii
+from ..plans.fs import read_if_present
 
 
 def curate_batch(
@@ -151,33 +152,17 @@ def corpus_ingest_run(
         )
 
     def _process(batch_df, batch_id: int) -> None:
-        from pyspark.errors import AnalysisException
-
-        try:
-            sigs = spark.read.parquet(sig_dir).select(id_col, *sig_cols)
-            have_sigs = len(sigs.take(1)) > 0
-        except AnalysisException as exc:
-            # ONLY the missing-table bootstrap may be swallowed: any
-            # other read failure (permissions, corrupt footer) must
-            # fail the batch — treating it as "first batch" would land
-            # the whole batch UNDEDUPED and append its signatures,
-            # permanently ingesting duplicates with no error surfaced.
-            # Older Spark spells the condition "Path does not exist";
-            # match both faces, not just the 4.x error class. A
-            # schema-inference failure is the OTHER empty-corpus face:
-            # a zero-row first batch leaves sig_dir holding only
-            # _SUCCESS, and reading it raises UNABLE_TO_INFER_SCHEMA —
-            # also bootstrap (no signatures exist), NOT an error.
-            msg = str(exc)
-            bootstrap = (
-                "PATH_NOT_FOUND" in msg
-                or "Path does not exist" in msg
-                or "UNABLE_TO_INFER_SCHEMA" in msg
-                or "Unable to infer schema" in msg
-            )
-            if not bootstrap:
-                raise
-            sigs, have_sigs = None, False
+        # ONLY a signature store that is not there yet is the
+        # first-batch bootstrap (plans.fs rule 2: no path, or a
+        # zero-row first batch that left only _SUCCESS): any other read
+        # failure (permissions, corrupt footer) must fail the batch —
+        # treating it as "first batch" would land the whole batch
+        # UNDEDUPED and append its signatures, permanently ingesting
+        # duplicates with no error surfaced.
+        sigs = read_if_present(spark, sig_dir)
+        if sigs is not None:
+            sigs = sigs.select(id_col, *sig_cols)
+        have_sigs = sigs is not None and len(sigs.take(1)) > 0
         if have_sigs:
             kept = dedup_against_corpus(
                 batch_df, sigs, id_col, text_col,

@@ -30,9 +30,9 @@ from ..operators.aggregates import (
     merge_quantile_states,
     quantile_sample_state,
 )
+from ..plans.fs import read_if_present
+from .ckpt import check_or_write_sidecar
 from .ckpt import ckpt_tag as _ckpt_tag
-from .ckpt import is_missing_path_error as _is_missing
-from .ckpt import state_has_files as _state_has_files
 
 _PART_COL = "qstate_batch_id"
 
@@ -46,45 +46,9 @@ def _spec_row(keys, value_col, id_col, k) -> tuple:
     )
 
 
-def _check_or_write_spec(spark: SparkSession, state_dir: str, row: tuple) -> None:
-    from pyspark.errors import AnalysisException
-
-    schema = "keys string, value_col string, id_col string, k int"
-    meta_path = state_dir + "_meta"
-    try:
-        rows = spark.read.parquet(meta_path).collect()
-    except AnalysisException as exc:
-        if not _is_missing(exc):
-            raise
-        # a missing/unreadable sidecar over EXISTING sample partitions
-        # must not be re-pinned to whatever spec the next writer brings
-        # — partials built with a different k already discarded rows,
-        # so a k-mismatched merge silently biases every quantile (the
-        # sketch store's refuse-adoption rule, same reasoning)
-        if _state_has_files(state_dir):
-            raise ValueError(
-                f"quantile state at {state_dir} has sample partitions "
-                "but no readable spec sidecar — refusing to adopt a "
-                "spec over existing partials (rewrite the _meta sidecar "
-                "with the spec they were built with)"
-            ) from exc
-        spark.createDataFrame([row], schema).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(meta_path)
-        return
-    if len(rows) != 1:
-        raise ValueError(
-            f"quantile state at {state_dir}: expected exactly 1 _meta row, "
-            f"found {len(rows)}"
-        )
-    stored = tuple(rows[0])
-    if stored != row:
-        raise ValueError(
-            f"quantile state at {state_dir} was built with spec {stored}; "
-            f"refusing to write partitions with mismatched spec {row} — "
-            "samples of different (keys, value, id, k) families must not "
-            "merge"
-        )
+# a k-mismatched merge of partials silently biases every quantile
+# (partials built with a different k already discarded rows)
+_SPEC_SCHEMA = "keys string, value_col string, id_col string, k int"
 
 
 def quantile_maintain_run(
@@ -121,8 +85,9 @@ def quantile_maintain_run(
         # a spec mismatch) without a single partition ever landing
         raise ValueError(f"quantile_maintain_run: k must be >= 1, got {k}")
     tag = _ckpt_tag(checkpoint_dir)
-    _check_or_write_spec(
-        spark, state_dir, _spec_row(keys, value_col, id_col, k)
+    check_or_write_sidecar(
+        spark, state_dir, _SPEC_SCHEMA, _spec_row(keys, value_col, id_col, k),
+        "quantile",
     )
 
     def _process(batch_df, batch_id: int) -> None:
@@ -165,13 +130,8 @@ def read_quantile_state(
         )
     keys = [c for c in rows[0]["keys"].split(",") if c]
     k = int(rows[0]["k"])
-    from pyspark.errors import AnalysisException
-
-    try:
-        states = spark.read.parquet(state_dir).drop(_PART_COL)
-    except AnalysisException as exc:
-        if not _is_missing(exc):
-            raise
+    states = read_if_present(spark, state_dir)
+    if states is None:
         # sidecar exists but no sample partition ever landed (every
         # drained batch was empty/all-NULL — a zero-row dynamic
         # overwrite touches no partitions): the store is legitimately
@@ -181,7 +141,9 @@ def read_quantile_state(
             f"quantile state at {state_dir} has a spec sidecar but no "
             "sample partitions yet — drain a batch with non-NULL "
             f"values in {rows[0]['value_col']!r} before reading"
-        ) from exc
+        )
     return finalize_quantiles(
-        merge_quantile_states(states, keys, k=k), probs, prefix=prefix
+        merge_quantile_states(states.drop(_PART_COL), keys, k=k),
+        probs,
+        prefix=prefix,
     )

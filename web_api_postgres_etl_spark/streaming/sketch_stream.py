@@ -19,58 +19,16 @@ first writer pins the family and every later writer must match.
 
 from __future__ import annotations
 
+from .ckpt import check_or_write_sidecar
 from .ckpt import ckpt_tag as _ckpt_tag
-from .ckpt import is_missing_path_error as _is_missing
-from .ckpt import state_has_files as _state_has_cells
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.sketch import cms_build, cms_merge
+from ..plans.fs import read_if_present
 
 _PART_COL = "cms_batch_id"
-
-
-def _check_or_write_family(
-    spark: SparkSession, state_dir: str, col: str, depth: int, width: int
-) -> None:
-    from pyspark.errors import AnalysisException
-
-    schema = "col string, depth int, width int"
-    row = (col, int(depth), int(width))
-    meta_path = state_dir + "_meta"
-    try:
-        rows = spark.read.parquet(meta_path).collect()
-    except AnalysisException as exc:
-        if not _is_missing(exc):
-            raise
-        # a missing/unreadable sidecar over EXISTING cell partitions
-        # must not be silently re-pinned to whatever family the next
-        # writer brings — that is exactly the positional-aliasing
-        # corruption the sidecar refuses; repair the meta by hand
-        if _state_has_cells(state_dir):
-            raise ValueError(
-                f"cms state at {state_dir} has cell partitions but no "
-                "readable family sidecar — refusing to adopt a family "
-                "over existing cells (rewrite the _meta sidecar with "
-                "the family the cells were built with)"
-            ) from exc
-        spark.createDataFrame([row], schema).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(meta_path)
-        return
-    if len(rows) != 1:
-        raise ValueError(
-            f"cms state at {state_dir}: expected exactly 1 _meta row, "
-            f"found {len(rows)}"
-        )
-    stored = (rows[0]["col"], rows[0]["depth"], rows[0]["width"])
-    if stored != row:
-        raise ValueError(
-            f"cms state at {state_dir} was built with family {stored}; "
-            f"refusing to write cells of family {row} — the cells are "
-            "positional and would silently alias wrong buckets on read"
-        )
 
 
 def cms_maintain_run(
@@ -98,7 +56,10 @@ def cms_maintain_run(
     # shared normalize-then-hash recipe (see streaming/ckpt.py for the
     # normalization rationale and the r8 migration note)
     ckpt_tag = _ckpt_tag(checkpoint_dir)
-    _check_or_write_family(spark, state_dir, col, depth, width)
+    check_or_write_sidecar(
+        spark, state_dir, "col string, depth int, width int",
+        (col, int(depth), int(width)), "cms",
+    )
 
     def _process(batch_df, batch_id: int) -> None:
         cells = cms_build(batch_df, col, depth=depth, width=width)
@@ -131,13 +92,8 @@ def read_cms_state(spark: SparkSession, state_dir: str) -> DataFrame:
     (empty source, or every batch all-NULL) is VALID and reads as the
     empty sketch; a path with neither sidecar nor cells raises (a
     mis-pointed path must not masquerade as an empty store)."""
-    from pyspark.errors import AnalysisException
-
-    try:
-        cells = spark.read.parquet(state_dir)
-    except AnalysisException as exc:
-        if not _is_missing(exc):
-            raise
+    cells = read_if_present(spark, state_dir)
+    if cells is None:
         # legitimate-but-empty only if the family sidecar vouches
         read_cms_family(spark, state_dir)  # raises on a mis-pointed path
         return spark.createDataFrame([], "row int, bucket int, cnt long")

@@ -69,7 +69,6 @@ from pyspark.sql import functions as F
 from ..caching import release_frame
 from ..operators.dedup import dedup_last_wins
 from ..operators.layout import (
-    _file_local,
     land_bootstrap,
     purge_rows,
     table_has_parquet,
@@ -172,8 +171,7 @@ def apply_changes(
         ),
         [id_col], version_col=seq_col, tiebreaker=tb,
     )
-    # scope check up front (also validates the path before bootstrap)
-    _file_local(table_path)
+    # table_has_parquet raises on a non-local path, before any bootstrap
     table_exists = table_has_parquet(table_path)
     tomb = tombstone_path(table_path)
     tomb_exists = op_col is not None and table_has_parquet(tomb)
