@@ -243,6 +243,35 @@ def test_pins_released_no_unbounded_growth(spark):
     )
 
 
+def test_pins_are_checkpoint_scans(spark):
+    """Every stage the plan pins is a local checkpoint (its plan is a
+    one-node LogicalRDD scan), so the returned plan embeds no cached
+    upstream tree."""
+    from web_api_postgres_etl_spark.plans.curation import release_pins
+
+    docs, bench = _inputs(spark)
+    cfg = CurationConfig(
+        ngram_n=8, shingle_n=2, num_hashes=8, bands=4,
+        jaccard_threshold=0.5, chunk_words=16, window_tokens=64,
+        num_shards=2, max_ppl=1e9, exact_substring_k=8,
+    )
+    pins = []
+    out = prepare_training_data(docs, bench, config=cfg, pins=pins)
+    try:
+        kinds = [
+            p._jdf.queryExecution().analyzed().getClass().getSimpleName()
+            for p in pins
+        ]
+        # gated, model, clean, exact, candidates, shingles, labels,
+        # clusters, split_docs
+        assert len(kinds) == 9 and set(kinds) == {"LogicalRDD"}, kinds
+        optimized = out._jdf.queryExecution().optimizedPlan().toString()
+        assert "InMemoryRelation" not in optimized
+        assert out.count() > 0
+    finally:
+        release_pins(pins)
+
+
 def test_classifier_gate_stage(spark):
     """The optional model-based quality stage: with a model trained to
     reject spam, a planted spam doc that passes the loose rule gate is

@@ -240,6 +240,42 @@ def test_minhash_survives_null_text(spark):
     assert near_dup_pairs(docs, "doc_id", "text", 2, 4, 2, 0.1).count() >= 0
 
 
+def test_near_dup_pairs_pins_candidates_then_shingles(spark):
+    """``cache_intermediates=True`` returns the lazy plan's pairs and
+    pins two checkpoint scans: the LSH candidates, then the candidate
+    documents' shingle sets."""
+    from web_api_postgres_etl_spark.caching import release_frame
+    from web_api_postgres_etl_spark.operators.dedup import near_dup_pairs
+
+    base = "the quick brown fox jumps over the lazy dog near the river bank"
+    docs = spark.createDataFrame(
+        [(1, base), (2, base + " today"), (3, base + " again today"),
+         (4, "an entirely different sentence about harbor towns and ships"),
+         (5, "an entirely different sentence about harbor towns and boats")],
+        "doc_id long, text string",
+    )
+    args = (docs, "doc_id", "text", 2, 8, 4, 0.5)
+    lazy = sorted(
+        tuple(r) for r in near_dup_pairs(*args, cache_intermediates=False).collect()
+    )
+    pins = [docs]
+    pinned = near_dup_pairs(*args, cache_intermediates=True, pins=pins)
+    try:
+        assert sorted(tuple(r) for r in pinned.collect()) == lazy
+        assert len(lazy) >= 2
+        assert pins[0] is docs and len(pins) == 3
+        cands, sh = pins[1:]
+        for frame in (cands, sh):
+            plan = frame._jdf.queryExecution().analyzed()
+            assert plan.getClass().getSimpleName() == "LogicalRDD"
+        assert cands.columns == ["id_a", "id_b"]
+        assert sh.columns == ["__id", "__sh"]
+        assert {(a, b) for a, b, _ in lazy} <= {tuple(r) for r in cands.collect()}
+    finally:
+        for frame in pins[1:]:
+            release_frame(frame)
+
+
 def test_dedup_corpus_lines_preserves_null_text(spark):
     from web_api_postgres_etl_spark.operators.dedup import dedup_corpus_lines
 

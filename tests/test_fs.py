@@ -9,10 +9,12 @@ import shutil
 import pytest
 
 from web_api_postgres_etl_spark.plans.fs import (
+    _escape_path_name,
     data_files,
     file_local,
     local_data_files,
     read_if_present,
+    unescape_path_name,
 )
 
 
@@ -116,3 +118,14 @@ def test_maintain_history_raises_on_a_non_parquet_data_file(spark, tmp_path):
     with pytest.raises(Exception):
         maintain_history(spark, changes, path, ["k"], "ts", ["attr"])
     assert os.listdir(path) == ["data.txt"]
+
+
+@pytest.mark.parametrize("name", ["p:m", "a=b/c", "100%", "x%41", "plain", "{q}#\x01"])
+def test_unescape_path_name_inverts_the_writer_escape(spark, name):
+    """``unescape_path_name`` undoes the writer's escaping and reads an
+    escaped directory name as Spark's partition discovery does."""
+    utils = spark._jvm.org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+    escaped = _escape_path_name(name)
+    assert escaped == utils.escapePathName(name)
+    assert unescape_path_name(escaped) == name
+    assert unescape_path_name(name) == utils.unescapePathName(name)

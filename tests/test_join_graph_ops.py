@@ -325,6 +325,39 @@ def test_fast_components_rows_are_the_nodes_rows(spark):
     got = sorted(tuple(r) for r in connected_components_fast(nodes, edges).collect())
     assert got == [(1, 1), (3, 1), (5, 5)]
 
+
+def test_fast_components_convergence_check_is_one_job(spark):
+    """The doubling loop's per-round convergence check submits exactly
+    one Spark job over a one-partition label checkpoint, whether or not
+    a label moved. The labels come out of a shuffle, as each round's
+    do: AQE coalesces the tiny exchange to one partition."""
+    from web_api_postgres_etl_spark.operators.graph import _moved
+
+    sc = spark.sparkContext
+    for moved in (True, False):
+        labels = (
+            spark.createDataFrame(
+                [(1, 1, False), (2, 1, moved)],
+                "id long, component long, __moved boolean",
+            )
+            .groupBy("id")
+            .agg(F.min("component").alias("component"),
+                 F.max("__moved").alias("__moved"))
+            .localCheckpoint(eager=True)
+        )
+        assert labels.rdd.getNumPartitions() == 1
+        group = f"convergence-check-{moved}"
+        sc.setJobGroup(group, group)
+        try:
+            got = _moved(labels)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        assert got is moved
+        assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
+
+
 def test_salted_join_accepts_spark_spellings(spark):
     from web_api_postgres_etl_spark.operators.joins import salted_join
 

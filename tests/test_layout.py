@@ -714,3 +714,41 @@ def test_upsert_rows_guards(spark, tmp_path):
             spark.createDataFrame([(1, 1)], "doc_id long, v long"),
             "doc_id",
         )
+
+
+def test_upsert_and_purge_round_trip_an_escaped_partition_column(spark, tmp_path):
+    """A partition column whose name the writer escapes (``p:m`` lands
+    in ``p%3Am=...`` directories): a pure insert, a replacing upsert
+    and a purge all keep the rows partitioned by the column's own name."""
+    import os
+
+    from web_api_postgres_etl_spark.operators.layout import purge_rows, upsert_rows
+
+    schema = "doc_id long, `p:m` string, v long"
+    path = str(tmp_path / "esc")
+    spark.createDataFrame(
+        [(i, "a" if i < 5 else "b", i) for i in range(10)], schema
+    ).write.partitionBy("p:m").parquet(path)
+    assert {d for d in os.listdir(path) if "=" in d} == {"p%3Am=a", "p%3Am=b"}
+
+    def rows():
+        return sorted(tuple(r) for r in spark.read.parquet(path)
+                      .select("doc_id", "p:m", "v").collect())
+
+    want = [(i, "a" if i < 5 else "b", i) for i in range(10)]
+    # pure insert: no affected file, the layout comes from any data file
+    upsert_rows(spark, path, spark.createDataFrame([(20, "a", 20)], schema), "doc_id")
+    want.append((20, "a", 20))
+    assert rows() == sorted(want)
+    # replacing upsert that moves a row across partitions
+    stats = upsert_rows(
+        spark, path, spark.createDataFrame([(2, "b", 200)], schema), "doc_id"
+    )
+    assert stats["rows_replaced"] == 1
+    want = [r for r in want if r[0] != 2] + [(2, "b", 200)]
+    assert rows() == sorted(want)
+    # purge rewrites the affected files back into their partitions
+    purge_rows(spark, path, spark.createDataFrame([(3,), (7,)], "doc_id long"), "doc_id")
+    want = [r for r in want if r[0] not in (3, 7)]
+    assert rows() == sorted(want)
+    assert {d for d in os.listdir(path) if "=" in d} == {"p%3Am=a", "p%3Am=b"}

@@ -49,9 +49,10 @@ def test_no_plan_memo_env_bypasses_memoization(spark, monkeypatch):
 
 def test_memoized_plans_never_reference_persist_or_streaming(spark):
     """The invariant behind the memoization honesty rule: a memoized
-    construction must not persist anything and must not be a streaming
-    plan — a persisted intermediate replayed across bench repeats would
-    be result caching. Hermetic by construction: the cache manager is
+    construction must not persist or checkpoint anything and must not
+    be a streaming plan — a persisted intermediate, or a checkpoint
+    (a LogicalRDD scan of blocks computed at construction), replayed
+    across bench repeats would be result caching. Hermetic by construction: the cache manager is
     cleared first and each query is built FRESH via __wrapped__, so an
     InMemoryRelation (or a non-empty cache manager afterwards) can only
     come from the construction itself — not from caches other tests or
@@ -67,6 +68,9 @@ def test_memoized_plans_never_reference_persist_or_streaming(spark):
         optimized = df._jdf.queryExecution().optimizedPlan().toString()
         assert "InMemoryRelation" not in optimized, (
             f"{name}: memoized plan references persisted data"
+        )
+        assert "LogicalRDD" not in optimized, (
+            f"{name}: memoized plan references checkpointed data"
         )
 
 

@@ -1,4 +1,20 @@
-"""Cache/checkpoint release helpers.
+"""Pin and release helpers for staging frames.
+
+A staging frame that several later plans read is pinned with
+``pin``: an eager ``localCheckpoint``. The frame is computed once,
+its blocks stay in executor storage, and its plan becomes a one-node
+``LogicalRDD`` scan. Every downstream plan starts from that scan —
+the in-session form of landing a layer as a table before the next
+layer reads it. ``persist()`` is not used for this: a persisted frame
+enters later plans as an ``InMemoryRelation`` that still carries its
+whole upstream plan, so the analyzer re-walks that tree and AQE
+re-renders its plan string in every consumer, and AQE may not change
+the cached plan's output partitioning.
+
+Trade-off: a local checkpoint has no lineage. If an executor holding
+its blocks is lost, the frame cannot be recomputed and every plan that
+reads it fails. A pipeline that must survive executor loss should land
+the layer as a table instead.
 
 Spark has two distinct pinning layers and only one obvious release
 API: ``Dataset.unpersist`` clears the SQL cache for a ``.persist()``-ed
@@ -17,6 +33,17 @@ Release only after every consumer has materialized.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
+
+
+def pin(frame: DataFrame, pins: list[DataFrame] | None = None) -> DataFrame:
+    """Compute ``frame`` now and return it as a one-node checkpoint scan.
+
+    The result is appended to ``pins`` when given, so the caller can
+    ``release_frame`` it once every consumer has materialized."""
+    frame = frame.localCheckpoint(eager=True)
+    if pins is not None:
+        pins.append(frame)
+    return frame
 
 
 def release_frame(df: DataFrame) -> None:

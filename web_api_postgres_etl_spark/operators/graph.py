@@ -114,6 +114,14 @@ def connected_components(
     return labels
 
 
+def _moved(labels: DataFrame) -> bool:
+    """Whether any row of a round's label checkpoint has ``__moved``.
+    ``isEmpty`` reads partitions only until it finds a row: one job
+    over a one-partition checkpoint, where ``limit(1).count()`` costs
+    two under AQE (the limit exchange, then the final stage)."""
+    return not labels.filter(F.col("__moved")).isEmpty()
+
+
 def connected_components_fast(
     nodes: DataFrame,
     edges: DataFrame,
@@ -148,7 +156,7 @@ def connected_components_fast(
     previous label, and one pointer-jump join — equi-joins on (id,
     label) pairs, payloads never shuffled; the round is
     localCheckpointed and convergence is read off that checkpoint
-    (``filter(moved).limit(1)``), not by a second join. One extra quiet
+    (``_moved``: one emptiness probe), not by a second join. One extra quiet
     round is allowed so convergence on the final productive round is
     still recognized. One left join then attaches every node
     (``coalesce(component, id)``): the returned frame reads ``nodes``
@@ -170,7 +178,7 @@ def connected_components_fast(
         .localCheckpoint(eager=True)
     )
     labels = None
-    changed = 1
+    changed = True
     for _ in range(max_iter + 1):
         if labels is None:
             # round 1 joins nothing: every endpoint still carries its own
@@ -201,13 +209,13 @@ def connected_components_fast(
             .select("id", jump.alias("component"), (jump < F.col("__prev")).alias("__moved"))
             .localCheckpoint(eager=True)
         )
-        changed = jumped.filter(F.col("__moved")).limit(1).count()
+        changed = _moved(jumped)
         # release the superseded round's checkpoint (see the plain
         # propagation loop) — at most two label tables pinned at once
         if labels is not None:
             release_frame(labels)
         labels = jumped
-        if changed == 0:
+        if not changed:
             break
     release_frame(sym)
     # the final checkpoint is read by the returned frame — the caller's
@@ -215,7 +223,7 @@ def connected_components_fast(
     # materialization
     if pins is not None and labels is not None:
         pins.append(labels)
-    if changed != 0:
+    if changed:
         raise RuntimeError(
             f"connected_components_fast did not converge in {max_iter} "
             "doubling rounds (component diameter > ~2^max_iter)"

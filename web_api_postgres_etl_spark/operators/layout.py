@@ -35,7 +35,7 @@ from typing import Sequence
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..plans.fs import file_local, local_data_files
+from ..plans.fs import file_local, local_data_files, unescape_path_name
 from .project import qcol
 
 
@@ -232,6 +232,26 @@ def zone_map_update(
     df = spark.read.option("basePath", path).parquet(*new_files)
     fresh = df.groupBy(F.input_file_name().alias("file")).agg(*_zone_aggs(cols))
     return existing.unionByName(fresh)
+
+
+def _partition_cols(leaf: str, base_local: str) -> list[str]:
+    """A data file's hive partition columns, in directory order, from
+    its path relative to the table root (all files of one table share
+    the layout — Spark enforces it at write time). Directory names are
+    escaped by the writer, so each name is unescaped back to the
+    column's own."""
+    segs = os.path.relpath(leaf, base_local).split(os.sep)[:-1]
+    return [unescape_path_name(s.split("=", 1)[0]) for s in segs if "=" in s]
+
+
+def _read_files(spark: SparkSession, path: str, uris: list[str]) -> DataFrame:
+    """The table's rows in ``uris`` (``input_file_name`` values), with
+    partition columns. Those URIs percent-encode the ``%`` of escaped
+    partition dirs, while a reader takes a path string literally, so
+    each is read by its local path."""
+    return spark.read.option("basePath", path).parquet(
+        *[file_local(u) for u in uris]
+    )
 
 
 def _move_parquet_in(frame, tmp: str, base_local: str, pcols: list) -> list:
@@ -572,18 +592,12 @@ def purge_rows(
             "removed_files": [],
             "added_files": [],
         }
-    # hive partition columns, in directory order, from an affected
-    # file's path relative to the table root (all files of one table
-    # share the layout — Spark enforces it at write time)
-    rel_dirs = os.path.relpath(
-        file_local(affected[0]), base_local
-    ).split(os.sep)[:-1]
     # partition-aware rewrite: moved files must land back inside their
     # own col=value/ directories (root-level leaf files silently
     # corrupt partitioned reads)
-    pcols = [seg.split("=", 1)[0] for seg in rel_dirs if "=" in seg]
+    pcols = _partition_cols(file_local(affected[0]), base_local)
 
-    sub = spark.read.option("basePath", path).parquet(*affected)
+    sub = _read_files(spark, path, affected)
     kept = sub.join(ids_only, id_col, "left_anti")
     added = _move_parquet_in(
         kept, path.rstrip("/") + ".purge_tmp", base_local, pcols
@@ -713,18 +727,13 @@ def upsert_rows(
     affected = [r["file"] for r in per_file]
     rows_replaced = sum(r["n"] for r in per_file)
 
-    rel_dirs = (
-        os.path.relpath(file_local(affected[0]), base_local).split(os.sep)[:-1]
-        if affected else []
+    # partition layout still matters for pure inserts — discover it
+    # from ANY existing data file when no file is affected
+    leaf = (
+        file_local(affected[0]) if affected
+        else next(local_data_files(base_local), None)
     )
-    pcols = [seg.split("=", 1)[0] for seg in rel_dirs if "=" in seg]
-    if not affected:
-        # partition layout still matters for pure inserts — discover it
-        # from ANY existing data file (all files share the layout)
-        leaf = next(local_data_files(base_local), None)
-        if leaf:
-            segs = os.path.relpath(leaf, base_local).split(os.sep)[:-1]
-            pcols = [s.split("=", 1)[0] for s in segs if "=" in s]
+    pcols = _partition_cols(leaf, base_local) if leaf else []
 
     # 2. new versions move in FIRST (duplicate-on-crash, never lose)
     added = _move_parquet_in(
@@ -733,7 +742,7 @@ def upsert_rows(
 
     # 3. rewrite affected files without the replaced ids, then drop them
     if affected:
-        sub = spark.read.option("basePath", path).parquet(*affected)
+        sub = _read_files(spark, path, affected)
         kept = sub.join(ids_only, id_col, "left_anti")
         added += _move_parquet_in(
             kept, path.rstrip("/") + ".upsert_old_tmp", base_local, pcols

@@ -20,7 +20,7 @@ import re
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..caching import release_frame
+from ..caching import pin, release_frame
 from ..functions.text import normalized_tokens
 from .project import qcol
 
@@ -498,11 +498,14 @@ def unigram_perplexity(
     aggregate collected to the driver; scoring explodes (id, term)
     and joins on term (AQE broadcasts a small vocabulary), then one
     per-doc average. ``cache_model`` pins the (term, count) frame —
-    it is read twice (the N/V scalar collect + the scoring join);
-    pass False when composing into an externally-cached plan, the
-    same switch every persisting operator here carries. A long-lived
-    session can pass ``pins=[]`` to receive the pinned model frame
-    for later unpersist (see ``plans.curation.release_pins``).
+    it is read twice (the N/V scalar collect + the scoring join) —
+    as an eager local checkpoint (``caching.pin``): the counting pass
+    runs inside this call, and the scoring join reads a one-node scan
+    instead of the counting plan. Pass False when composing into an
+    externally-cached plan, the same switch every persisting operator
+    here carries. A long-lived session can pass ``pins=[]`` to receive
+    the pinned model frame for later release (see
+    ``plans.curation.release_pins``).
 
     ``model_counts`` takes a PRECOMPUTED (term, count) table (from
     :func:`build_unigram_model`, typically read back from parquet) and
@@ -528,9 +531,7 @@ def unigram_perplexity(
             .agg(F.count("*").alias("__c"))
         )
     if cache_model:
-        tc = tc.persist()
-        if pins is not None:
-            pins.append(tc)
+        tc = pin(tc, pins)
     totals = tc.select(
         F.sum("__c").alias("n"), F.count("*").alias("v")
     ).first()
@@ -539,7 +540,7 @@ def unigram_perplexity(
         if cache_model:
             # nothing downstream will ever read tc again — don't leave
             # an empty frame pinned in a long-lived session
-            tc.unpersist()
+            release_frame(tc)
         # a token-less model corpus carries no information: stay TOTAL
         # (every doc gets NULL scores) instead of raising — a scheduled
         # pipeline hitting an empty partition must degrade to zero

@@ -27,6 +27,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..caching import pin
 from ..functions.text import gopher_flags, redact_pii
 from ..operators.dedup import (
     dedup_exact_hashed,
@@ -130,13 +131,13 @@ class CurationConfig:
 
 
 def release_pins(pins: list[DataFrame]) -> None:
-    """Unpersist every frame ``prepare_training_data`` appended to the
+    """Release every frame ``prepare_training_data`` appended to the
     caller's ``pins`` list — call AFTER materializing the returned plan
-    (write/collect); the result is lazy, so releasing earlier would
-    silently void the pins and re-run the staged subtrees. The frames
-    (and anything derived but not yet materialized) are unusable after
-    release — a localCheckpointed staging frame has no lineage left to
-    recompute from."""
+    (write/collect). The pins are local checkpoints with no lineage, so
+    nothing recomputes them: releasing before the result is
+    materialized makes the result unreadable (its scans of the pinned
+    blocks fail), as does reading any frame derived from a pin
+    afterwards."""
     from ..caching import release_frame
 
     for frame in pins:
@@ -164,20 +165,19 @@ def prepare_training_data(
     split on cluster representatives, so a dropped twin can never
     reappear and a kept twin can never straddle the split boundary.
 
-    Session hygiene: the plan pins 3-5 staging frames (the multi-
-    consumer subtrees documented inline). A one-shot run can ignore
-    them — executors release storage at session end. A LONG-LIVED
-    session calling this repeatedly should pass ``pins=[]`` and call
-    ``release_pins(pins)`` once the returned frame is materialized,
-    or pinned RDDs accumulate across invocations.
+    Session hygiene: the plan pins its multi-consumer staging frames
+    (documented inline) with ``caching.pin``, an eager local
+    checkpoint: each is computed while this function runs, and every
+    later stage reads it as a one-node scan instead of re-embedding
+    its upstream plan. Operators pin their own reused intermediates
+    into the same list (the near-dup candidates and shingles, the
+    perplexity model, the final component labels). A one-shot run can
+    ignore them — executors release storage at session end. A
+    LONG-LIVED session calling this repeatedly should pass ``pins=[]``
+    and call ``release_pins(pins)`` once the returned frame is
+    materialized, or pinned RDDs accumulate across invocations.
     """
     cfg = config or CurationConfig()
-
-    def _pin(frame: DataFrame) -> DataFrame:
-        frame = frame.persist()
-        if pins is not None:
-            pins.append(frame)
-        return frame
 
     # 0a. URL-level reduction (C4 order: the cheapest corpus-wide cut
     # runs first — one normalized-URL digest dedup, then the optional
@@ -330,9 +330,9 @@ def prepare_training_data(
     if cfg.sentence_dedup_max_docs is not None:
         from ..operators.dedup import dedup_corpus_sentences
 
-        # PERSIST: gated is read twice (the dedup's count+probe passes
+        # PIN: gated is read twice (the dedup's count+probe passes
         # read the text side; the join-back reads the full frame)
-        gated = _pin(gated)
+        gated = pin(gated, pins)
         sdedup = dedup_corpus_sentences(
             gated, id_col, text_col,
             max_docs=cfg.sentence_dedup_max_docs,
@@ -346,14 +346,14 @@ def prepare_training_data(
     if cfg.max_ppl is not None:
         from ..operators.retrieval import unigram_perplexity
 
-        # PERSIST before scoring: ppl derives from gated and is joined
+        # PIN before scoring: ppl derives from gated and is joined
         # back onto gated — without the pin the gate+scrub subtree
         # re-executes per join branch (the measured multi-x trap this
-        # plan's later `exact` persist documents); self-scoring adds a
+        # plan's later `exact` pin documents); self-scoring adds a
         # third read for the model build
-        gated = _pin(gated)
+        gated = pin(gated, pins)
         if cfg.ppl_model_counts is not None:
-            # production shape: one persisted reference model scores
+            # production shape: one pinned reference model scores
             # every batch — no counting pass at all
             ppl = unigram_perplexity(
                 gated, id_col, text_col,
@@ -400,9 +400,9 @@ def prepare_training_data(
                 "nor dsir_sample_n given — configure the gate and/or "
                 "the resample form"
             )
-        # PERSIST before scoring: scored derives from gated AND joins
+        # PIN before scoring: scored derives from gated AND joins
         # back onto it (the 1c multi-consumer rule)
-        gated = _pin(gated)
+        gated = pin(gated, pins)
         if cfg.dsir_hashed_buckets is not None:
             from ..operators.retrieval import dsir_logratio_hashed
 
@@ -461,10 +461,10 @@ def prepare_training_data(
     if cfg.exact_substring_k is not None:
         from ..operators.dedup import exact_substring_dedup
 
-        # PERSIST: clean is read three times here (the operator's
+        # PIN: clean is read three times here (the operator's
         # window pass + word re-split + this join's left side) — the
         # same re-execution trap as the ppl stage above
-        clean = _pin(clean)
+        clean = pin(clean, pins)
         cut = exact_substring_dedup(
             clean, id_col, text_col,
             k=cfg.exact_substring_k,
@@ -473,21 +473,16 @@ def prepare_training_data(
         clean = clean.drop(text_col).join(cut, on=id_col, how="inner")
 
     # 3. exact dedup on the scrubbed digest (16-byte shuffle keys).
-    # CHECKPOINTED, not just persisted: this is the plan's staging
-    # layer — five downstream consumers (signatures, verify, survivors,
-    # split, chunks) each reference it, and every LOGICAL reference
-    # duplicates the whole upstream lineage (gate+ppl+decontam+cut,
-    # themselves self-referencing), so the composed tree grows
-    # multiplicatively and Catalyst analysis/canonicalization blows the
-    # driver heap with the optional stages on. localCheckpoint
-    # materializes once and TRUNCATES lineage — the in-session
-    # equivalent of the medallion stg_ write a production run does
-    # here (which truncates lineage the same way).
-    exact = dedup_exact_hashed(clean, text_col, id_col).localCheckpoint(
-        eager=True
-    )
-    if pins is not None:
-        pins.append(exact)
+    # This is the plan's staging layer — five downstream consumers
+    # (signatures, verify, survivors, split, chunks) each reference it,
+    # and every LOGICAL reference would duplicate the whole upstream
+    # lineage (gate+ppl+decontam+cut, themselves self-referencing), so
+    # the composed tree would grow multiplicatively and Catalyst
+    # analysis/canonicalization blows the driver heap with the optional
+    # stages on. The pin materializes once and TRUNCATES lineage — the
+    # in-session equivalent of the medallion stg_ write a production
+    # run does here (which truncates lineage the same way).
+    exact = pin(dedup_exact_hashed(clean, text_col, id_col), pins)
 
     # 4. near-dup pairs → clusters, computed ONCE and reused for both
     # the survivor choice and the split key (the leakage guarantee): a
@@ -541,11 +536,11 @@ def prepare_training_data(
             )
         from ..operators.graph import select_canonical
 
-        clusters = _pin(select_canonical(
+        clusters = pin(select_canonical(
             exact, pairs, id_col, cfg.survivor_score_col, pins=pins,
-        ))
+        ), pins)
     else:
-        clusters = _pin(dedup_clusters(exact, pairs, id_col, pins=pins))
+        clusters = pin(dedup_clusters(exact, pairs, id_col, pins=pins), pins)
     survivors = exact.join(
         clusters.filter(F.col("is_canonical")).select(F.col(id_col)),
         on=id_col, how="left_semi",
@@ -560,11 +555,11 @@ def prepare_training_data(
         clusters.select(F.col(id_col), F.col("cluster").alias("split_key")),
         on=id_col, how="left",
     ).withColumn("split_key", F.coalesce(F.col("split_key"), F.col(id_col)))
-    # persisted: consumed twice below (chunk input + split re-attach)
+    # pinned: consumed twice below (chunk input + split re-attach)
     split_docs = deterministic_split(
         with_key, "split_key", cfg.split_weights
     ).drop("split_key")
-    split_docs = _pin(split_docs)
+    split_docs = pin(split_docs, pins)
 
     # 6. chunk → deterministic shard → pack per (split, shard)
     chunks = chunk_documents(

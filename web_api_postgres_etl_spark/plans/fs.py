@@ -32,6 +32,7 @@ fast path, whose URIs :func:`file_local` unwraps.
 from __future__ import annotations
 
 import os
+import re
 from collections.abc import Iterator
 
 from pyspark.sql import DataFrame, SparkSession
@@ -182,6 +183,13 @@ _PATH_ESCAPES = frozenset(map(chr, range(1, 32))) | frozenset("\"#%'*/:=?\\\x7f{
 
 def _escape_path_name(s: str) -> str:
     return "".join(f"%{ord(c):02X}" if c in _PATH_ESCAPES else c for c in s)
+
+
+def unescape_path_name(s: str) -> str:
+    """The inverse of the writer's escaping: every ``%XX`` hex pair
+    decoded, as partition discovery reads a directory name
+    (ExternalCatalogUtils.unescapePathName)."""
+    return re.sub(r"%([0-9A-Fa-f]{2})", lambda m: chr(int(m.group(1), 16)), s)
 
 
 def partition_dir(col: str, value) -> str:
